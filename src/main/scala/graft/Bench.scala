@@ -230,6 +230,12 @@ object Bench {
     walk(df.queryExecution.executedPlan)
   }
 
+  /** Query selection for SPARK_GRAFT_BENCH_ONLY / _MEDIAN: a query is
+    * selected by its full name or by its exact `qNN` key, so `q19`
+    * selects q19_merge_upsert_cdc and not q190–q199. */
+  private[graft] def selects(keys: Set[String], name: String): Boolean =
+    keys.contains(name) || keys.contains(name.takeWhile(_ != '_'))
+
   /** Fresh-JVM probe command for a suspect query (r11 brief #5): the
     * same Bench main, one query, in an isolated working directory (its
     * own BENCH_PERF.jsonl — never the parent's), with
@@ -418,7 +424,7 @@ object Bench {
     // min: min hides a real regression that shows in every rep's tail,
     // median discards exactly the one-off spike.
     // SPARK_GRAFT_BENCH_MEDIAN adds explicitly-flagged names to the
-    // median set (prefix match, the BENCH_ONLY convention) — for
+    // median set (matched as BENCH_ONLY, see `selects`) — for
     // adjudicating a specific watch query that sits below the top-20
     // cutoff. The driver never sets it.
     val medianExtra: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_MEDIAN")
@@ -429,8 +435,7 @@ object Bench {
       // cutoff can't flip in/out of the rep protocol between captures
       priorSecs.toSeq.sortBy { case (n, s) => (-s, n) }
         .take(20).map(_._1).toSet ++
-        priorSecs.keySet.filter(n =>
-          medianExtra.exists(p => n == p || n.startsWith(p)))
+        priorSecs.keySet.filter(selects(medianExtra, _))
     val perfLog = new java.io.PrintWriter(
       new java.io.FileWriter("BENCH_PERF.jsonl", false))
     // run-context stamp: a captured number is only interpretable next to
@@ -447,14 +452,13 @@ object Bench {
         s""","heap_max_mb":${Runtime.getRuntime.maxMemory() / (1024 * 1024)}""" +
         s""","sf_dir":"$sfDir"}"""
     // dev knob: SPARK_GRAFT_BENCH_ONLY=q104,q114 times just those
-    // queries (prefix match on the qNN key) — for iterating on one
+    // queries (see `selects`) — for iterating on one
     // query's plan without paying the full-suite wall time. The driver
     // never sets it, so captured rounds always run the whole suite.
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(f =>
-        f.contains(n) || f.exists(p => n.startsWith(p))))
+      .filter(n => only.forall(selects(_, n)))
     // `qNN` prefix — unique today; fall back to full names if a future
     // query breaks that rather than silently merging two keys
     val short: Map[String, String] = {

@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.Functions
+import graft.functions.{Functions, RuntimeParam}
 
 /** Normalize stage (reference data_process/normalize.py:94-163): status
   * derivation (B4), numeric parsing over the declared field list (F1),
@@ -33,8 +33,10 @@ object Normalize {
 
   /** @param asOf wall-clock anchor for relative Russian dates
     *             ("сегодня"/"вчера"/year-rollback); reference behavior =
-    *             current_timestamp(). */
+    *             current_timestamp(). Bound as a [[RuntimeParam]], so
+    *             batches with different anchors share generated code. */
   def apply(df: DataFrame, asOf: Column): DataFrame = {
+    val asOfParam = RuntimeParam(asOf)
     // single bulk select (not a withColumn fold — that re-analyzes the
     // plan once per field); column order matches the historical chain:
     // input order with in-place transforms, temp cols dropped, status last
@@ -46,7 +48,7 @@ object Normalize {
     val kept = df.columns.filterNot(tempCols.toSet).toSeq.map { f =>
       if (f == "status") statusExpr.as(f)
       else if (numSet(f)) Functions.parseNumeric(col(f)).as(f)
-      else if (dateSet(f)) Functions.parseRussianDate(col(f), asOf).as(f)
+      else if (dateSet(f)) Functions.parseRussianDate(col(f), asOfParam).as(f)
       else col(f)
     }
     val out = if (df.columns.contains("status")) kept

@@ -3,6 +3,7 @@ package graft.merge
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.ops.Materialize
 
 /** The engine's centerpiece MERGE operator: the reference's keyed upsert
   * (data_process/merge.py:4-111) re-expressed as ONE Spark job:
@@ -12,9 +13,11 @@ import org.apache.spark.sql.types._
   *
   * The per-row update rules (SURVEY §2 D-rules R1–R9) run inside a single
   * Catalyst `aggregate()` higher-order function, so the whole merge is
-  * declarative, codegen-friendly, and reproduces the reference's
-  * *sequential* semantics exactly — including several source rows for the
-  * same key in one batch (insert-then-update, intra-batch price changes).
+  * declarative and reproduces the reference's *sequential* semantics
+  * exactly — including several source rows for the same key in one
+  * batch (insert-then-update, intra-batch price changes). The fold is
+  * interpreted, not generated: `ArrayAggregate` is `CodegenFallback` in
+  * Spark 4.1.
   *
   * Scale shape: one hash shuffle of the (small) batch side + one join
   * against the master table. With the master bucketed/partitioned by
@@ -44,6 +47,9 @@ object MergeListings {
     * @param source batch; may carry several rows per key — `seqCol` gives
     *               their arrival order (reference = list order). Pass a
     *               monotonic column; ties broken arbitrarily.
+    *
+    * Eager when both sides carry `offer_url`: the url fallback reads the
+    * sequenced source three times, so it is materialized at call time.
     */
   def mergeBatch(target: DataFrame, source: DataFrame,
       seqCol: Option[String] = None): DataFrame = {
@@ -78,7 +84,7 @@ object MergeListings {
 
     // ---- 1. Arrival order: the reference folds source rows list-order;
     // seqCol carries that order (default: monotonic id = partition order).
-    val seqSource = seqCol match {
+    val sequenced = seqCol match {
       case Some(c) => source.withColumn("__seq", col(c).cast(LongType)).drop(c)
       case None    => source.withColumn("__seq", monotonically_increasing_id())
     }
@@ -91,6 +97,9 @@ object MergeListings {
     // nondeterministic; ours is the documented deterministic choice). No
     // match → row dropped (reference skips it). Marked unpublished.
     val hasUrl = sCols.contains(URL) && tCols.contains(URL)
+    // three reads below (candidates, orphans, keyed rows): computed once,
+    // so every read also sees the same __seq ids
+    val seqSource = if (hasUrl) Materialize(sequenced) else sequenced
     val sourceKeyed: DataFrame = if (hasUrl) {
       val tgtCand = target.filter(col(KEY).isNotNull && col(URL).isNotNull)
         .select(col(URL).as("__lk_url"), col(KEY).as("__cand"),

@@ -14,8 +14,10 @@ import org.apache.spark.sql.DataFrame
   *    entry points built on this ([[Dedup.ngramJaccardPairs]],
   *    [[Dedup.crossCorpusJaccardPairs]], [[TextAnalysis.bigramFamiliarity]],
   *    [[TextAnalysis.stripBoilerplateLines]], [[TextAnalysis.tfIdfTop]],
-  *    [[Packing.chunkAssignments]], [[Packing.globalRowNumber]]) are
-  *    therefore actions, not plan constructors.
+  *    [[Packing.chunkAssignments]], [[Packing.globalRowNumber]],
+  *    [[graft.pipeline.Pipeline.processBatch]], and
+  *    [[graft.merge.MergeListings.mergeBatch]] when its url fallback
+  *    applies) are therefore actions, not plan constructors.
   *  - **Block liveness**: the default `localCheckpoint` stores blocks on
   *    the executors that computed them. On a real cluster with executor
   *    loss or dynamic allocation, a lost block makes every downstream

@@ -3,7 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.{Flatten, Normalize}
+import graft.functions.RuntimeParam
 import graft.merge.MergeListings
+import graft.ops.Materialize
 import graft.parse.ListingParser
 
 /** E1 DAG (SURVEY §3): the reference's run() re-expressed as DataFrame
@@ -11,10 +13,11 @@ import graft.parse.ListingParser
   * arrive as a (url, html) frame from any source (fixture dirs here;
   * the same shape a mapPartitions HTTP client would produce).
   *
-  * Stage boundaries are lazy — Catalyst fuses parse→flatten→normalize
-  * into one job; only the merge shuffles (on offer_id). The master
-  * table at scale is Parquet partitioned by a stable hash of offer_id,
-  * making the per-batch merge join co-partitioned.
+  * `processBatch` materializes the normalized batch (parse→flatten→
+  * normalize run as one job, once per page) before the merge, which
+  * reads it several times; only the merge shuffles (on offer_id). The
+  * master table at scale is Parquet partitioned by a stable hash of
+  * offer_id, making the per-batch merge join co-partitioned.
   */
 case class RawPage(url: String, html: String)
 
@@ -84,13 +87,23 @@ object Pipeline {
       probe.schema)
   }
 
+  /** parse → filter → flatten → normalize: the batch side of
+    * [[processBatch]], before it is materialized. */
+  def normalizedBatch(spark: SparkSession, pages: Dataset[RawPage],
+      asOf: Column, timestamp: String): DataFrame =
+    Normalize(Flatten(filterParsed(parsePages(spark, pages, timestamp))), asOf)
+
   /** One micro-batch: parse → filter → flatten → normalize → (optionally
-    * synthesize unpublish markers) → MERGE into the master. */
+    * synthesize unpublish markers) → MERGE into the master.
+    *
+    * Eager: the normalized batch is materialized at call time, in one
+    * job that parses each page once. The merge reads the batch directly
+    * and through `missingAsUnpublished`, and every read of an
+    * unmaterialized batch would run the HTML parser again. */
   def processBatch(spark: SparkSession, master: DataFrame,
       pages: Dataset[RawPage], asOf: Column, timestamp: String,
       updateUnpublishedBySearch: Boolean = true): DataFrame = {
-    val parsed = filterParsed(parsePages(spark, pages, timestamp))
-    val normalized = Normalize(Flatten(parsed), asOf)
+    val normalized = Materialize(normalizedBatch(spark, pages, asOf, timestamp))
     val batch =
       if (updateUnpublishedBySearch)
         normalized.unionByName(
@@ -134,11 +147,13 @@ object Pipeline {
 
   /** P2 dashboard view: last_active within 7 days of asOf OR active;
     * unparseable last_active coerces null and drops from the left
-    * disjunct (pandas errors="coerce", parse_data.py:479-483). */
+    * disjunct (pandas errors="coerce", parse_data.py:479-483). The
+    * cutoff is a [[RuntimeParam]], so every hour reuses the same
+    * generated code. */
   def dashboardView(master: DataFrame, asOf: Column): DataFrame =
     master.filter(
       try_to_timestamp(col("last_active"), lit("yyyy-MM-dd HH:mm:ss"))
-        >= asOf - expr("INTERVAL 7 DAYS")
+        >= RuntimeParam(asOf - expr("INTERVAL 7 DAYS"))
         || col("status") === "active")
 
   /** A9/A10 CSV sink with NaN scrub (parse_data.py:187-204): NaN → null

@@ -21,6 +21,18 @@ class BenchContractSpec extends AnyFunSuite {
       s"colliding numeric keys: ${nums.diff(nums.distinct).distinct}")
   }
 
+  test("BENCH_ONLY selects the exact qNN key: q19 is not q190-q199") {
+    val names = SparkEntry.queries.keys.toSeq
+    assert(names.filter(Bench.selects(Set("q19"), _)) == Seq("q19_merge_upsert_cdc"))
+    assert(names.filter(Bench.selects(Set("q190"), _)) == Seq("q190_cube_subtotals"))
+    // the fresh-JVM probe passes the full name
+    assert(names.filter(Bench.selects(Set("q190_cube_subtotals"), _)) ==
+      Seq("q190_cube_subtotals"))
+    assert(names.filter(Bench.selects(Set("q19", "q38"), _)).sorted ==
+      names.filter(n => n.startsWith("q19_") || n.startsWith("q38_")).sorted)
+    assert(!Bench.selects(Set("q1"), "q19_merge_upsert_cdc"))
+  }
+
   test("final summary line is tiny and query-count-independent") {
     // r7: the combined total+map line (1,982 B at 216 queries) lost
     // its HEAD once sbt's ~70 B [success] epilogue shared the

@@ -206,4 +206,15 @@ class FunctionsSpec extends SparkSpec {
     assert(m("metro_station") == "Арбатская")
     assert(m("metro_id") == "42")
   }
+
+  test("RuntimeParam: same values as the bare expression, constant or not") {
+    // a range, not a local Seq: the projection must run through codegen
+    val df = spark.range(3).select(when($"id" === 0, lit("2026-08-12 10:00:00"))
+      .when($"id" === 1, lit("2026-08-01 00:00:00")).cast("timestamp").as("t"))
+    def probe(e: Column): Seq[Column] =
+      Seq(e, year(e), e === $"t", e - expr("INTERVAL 7 DAYS"))
+    for (e <- Seq(asOf, lit(null).cast("timestamp"), $"t"))
+      assert(df.select(probe(RuntimeParam(e)): _*).collect().toSeq ==
+        df.select(probe(e): _*).collect().toSeq)
+  }
 }

@@ -129,6 +129,116 @@ class PipelineSpec extends SparkSpec {
     assert(viewAfter.count() == 2)  // 1001 non-active + stale → dropped
   }
 
+  // ---- the hourly loop: one search hour against a published master ----
+
+  /** A keyless card: its draft link yields an `offer_url` but no id. */
+  private val keylessCard =
+    """<article data-name="CardComponent">
+      |<div data-name="LinkArea"><a href="https://www.cian.ru/rent/flat/draft-7/">card</a></div>
+      |<span data-mark="MainPrice"><span>20 000 ₽/мес.</span></span>
+      |<div data-testid="metadata-updated-date"><span>Обновлено: сегодня 11:00</span></div>
+      |</article>""".stripMargin
+
+  /** The hour's search page: card 1001 and the keyless card; 1002 and
+    * 1003 have left the search. */
+  private def hourPage: RawPage = {
+    val page = fixture("search_page.html")
+    val firstCard = page.indexOf("</article>") + "</article>".length
+    RawPage("https://www.cian.ru/cat.php?p=1",
+      page.take(firstCard) + keylessCard + "</div></body></html>")
+  }
+
+  /** The search fixture's 3 listings, published; 1002 is non-active and
+    * 1003's offer_url is the keyless card's link, so the url fallback
+    * adopts 1003 for it. */
+  private lazy val masterDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-hour").toString + "/master"
+    val m = Pipeline.processBatch(spark, Pipeline.emptyMaster(spark),
+      spark.createDataset(Seq(
+        RawPage("https://www.cian.ru/cat.php?p=1", fixture("search_page.html")))),
+      asOf, ts)
+    graft.io.AtomicParquet.publish(m
+      .withColumn("status", when($"offer_id" === "1002", lit("non active"))
+        .otherwise($"status"))
+      .withColumn("offer_url", when($"offer_id" === "1003",
+        lit("https://www.cian.ru/rent/flat/draft-7")).otherwise($"offer_url")),
+      dir)
+    dir
+  }
+
+  private def master = spark.read.parquet(masterDir)
+
+  /** Whole-stage generated Java source of every codegen stage of an
+    * executed plan — the text the codegen cache is keyed on. */
+  private def codegenBodies(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def walk(p: SparkPlan): Seq[String] = p.flatMap {
+      case w: WholeStageCodegenExec => Seq(w.doCodeGen()._2.body)
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case _ => Nil
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  test("an hour's generated code does not depend on asOf") {
+    // processBatch → publish → dashboardView, as the hourly job runs it
+    def hour(at: String) = {
+      val hourAsOf = lit(at).cast("timestamp")
+      val pages = spark.createDataset(Seq(hourPage))
+      val normalized = Pipeline.normalizedBatch(spark, pages, hourAsOf, at)
+      normalized.collect()
+      val merged = Pipeline.processBatch(spark, master, pages, hourAsOf, at)
+      val rows = merged.collect().map(r => r.getAs[String]("offer_id") -> r).toMap
+      val dir = java.nio.file.Files.createTempDirectory("graft-pub").toString + "/m"
+      graft.io.AtomicParquet.publish(merged, dir)
+      val view = Pipeline.dashboardView(spark.read.parquet(dir), hourAsOf)
+      val viewIds = view.select("offer_id").as[String].collect().toSet
+      (Seq(normalized, merged, view).map(codegenBodies), rows, viewIds)
+    }
+    val (codeA, rowsA, viewA) = hour("2026-08-12 10:00:00")
+    val (codeB, rowsB, viewB) = hour("2026-08-19 10:00:00")
+    codeA.foreach(stages => assert(stages.nonEmpty))
+    assert(codeA.map(_.size) == codeB.map(_.size))
+    for ((a, b) <- codeA.flatten.zip(codeB.flatten) if a != b)
+      fail("generated code depends on asOf: " +
+        a.linesIterator.zip(b.linesIterator).find { case (x, y) => x != y })
+    // ...while asOf still reaches the rows: relative dates, the url
+    // fallback's unpublish date, and the dashboard's 7-day cutoff
+    assert(rowsA("1001").getAs[String]("last_active") == "2026-08-12 14:30:00")
+    assert(rowsB("1001").getAs[String]("last_active") == "2026-08-19 14:30:00")
+    assert(rowsA("1003").getAs[String]("unpublished_date") == "2026-08-12 11:00:00")
+    assert(rowsB("1003").getAs[String]("unpublished_date") == "2026-08-19 11:00:00")
+    // 1002 is non-active, last active 2026-08-11 09:15
+    assert(viewA == Set("1001", "1002", "1003"))
+    assert(viewB == Set("1001", "1003"))
+  }
+
+  test("processBatch parses each page once through the url fallback") {
+    val parsed = spark.sparkContext.longAccumulator("pages parsed")
+    val pages = spark.createDataset(Seq(hourPage)).map { p => parsed.add(1); p }
+    val merged = Pipeline.processBatch(spark, master, pages, asOf, ts)
+    val rows = merged.collect().map(r => r.getAs[String]("offer_id") -> r).toMap
+    val again = merged.count()
+    assert(parsed.value == 1L)
+    assert(again == 3)
+    // the keyless card adopted 1003 by url (no insert) and unpublished it
+    assert(rows.keySet == Set("1001", "1002", "1003"))
+    val r1003 = rows("1003")
+    assert(r1003.getAs[Boolean]("is_unpublished"))
+    assert(r1003.getAs[String]("unpublished_date") == "2026-08-12 11:00:00")
+    assert(r1003.getAs[Any]("total_price_changes") == null) // no price change counted
+    // 1001 seen again at an unchanged price; 1002 left the search
+    val r1001 = rows("1001")
+    assert(r1001.getAs[Double]("price_value") == 55000.0)
+    assert(r1001.getAs[String]("publication_date") == "2026-08-12 14:30:00")
+    assert(r1001.getAs[Any]("total_price_changes") == null)
+    assert(!r1001.getAs[Boolean]("is_unpublished"))
+    assert(rows("1002").getAs[Boolean]("is_unpublished"))
+    assert(rows("1002").getAs[String]("last_active") == "2026-08-11 09:15:00")
+  }
+
   test("status column derives from is_unpublished (B4)") {
     val p = Pipeline.parsePages(spark,
       spark.createDataset(Seq(RawPage("https://www.cian.ru/rent/flat/5/",
