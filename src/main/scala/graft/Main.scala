@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Pipeline, RawPage}
 import graft.io.{AtomicParquet, PerfTracker}
@@ -31,15 +30,7 @@ object Main {
       java.time.LocalDateTime.now().format(
         java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")))
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-run")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // A13: per-run perf log (task-denominated analog of the reference's
     // request tracker); JSON lines land next to the CSV views
     val perf = PerfTracker.install(spark)

@@ -19,10 +19,13 @@ import graft.ops.Materialize
   * interpreted, not generated: `ArrayAggregate` is `CodegenFallback` in
   * Spark 4.1.
   *
-  * Scale shape: one hash shuffle of the (small) batch side + one join
-  * against the master table. With the master bucketed/partitioned by
-  * `offer_id` the join is co-located; with a small batch Catalyst picks a
-  * broadcast join and the master is never shuffled at all.
+  * Scale shape: one hash shuffle of the (small) batch side + a
+  * `SortMergeJoin FullOuter` against the master. A full outer join
+  * cannot be broadcast, so the WHOLE master is hash-shuffled on
+  * `offer_id` every hour, however small the batch (pipebench
+  * `big_master`: 86.5 MB of `merge.shuffle_bytes` against 1.1 MB on
+  * `hourly`). A touched-key merge that leaves untouched rows unshuffled
+  * is ROADMAP item 1.
   *
   * Divergences from the reference (documented, deliberate):
   *   - J2 url-fallback "first match wins" depended on Python dict order;

@@ -1005,7 +1005,7 @@ object Similarity {
     * sf since the k-means is seeded). The testdata embeddings are
     * UNIFORM-RANDOM — near-orthogonal, so cells carry almost no signal
     * and recall scales ≈ linearly with nProbe (0.60 at nProbe 4, 0.84
-    * at 8, 0.91 at 10 — measured via [[graft.tools.IvfMiningProbe]]);
+    * at 8, 0.91 at 10 — recorded in SCALING.md "Round-9 hardening");
     * this is ANN's worst case, and on real clustered embeddings the
     * same operator reaches the same recall at nProbe ≈ 2-4 with a
     * proportionally deeper prune. nProbe is the recall lever, exactly

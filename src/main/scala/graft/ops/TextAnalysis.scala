@@ -522,8 +522,8 @@ object TextAnalysis {
       idCol: Option[String]): DataFrame = {
     val words = split(trim(col(textCol)), "\\s+")
     val keep = idCol.map(col).toSeq
-    // NOT widened — re-measured r14 and the r12 rule STANDS: an
-    // isolated same-JVM probe (tools/WidenProbe) shows the widened
+    // NOT widened — re-measured r14 and the r12 rule STANDS (VERDICT.md
+    // row 12): an isolated same-JVM A/B showed the widened
     // build wins its own stage (1.63 → 0.62 s wall at sf0.1) but every
     // downstream consumer stage of the 32-partition checkpoint pays
     // ~+0.25 s of per-task overhead on this oversubscribed runner

@@ -20,7 +20,7 @@ import graft.functions.{CosineSimilarity, EditDistanceExpr, LcsLengthExpr, Norma
   *
   * Production sessions hook at build time:
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions).…
+  *   builder.withExtensions(new GraftExtensions)  // on the session builder
   *   // or: spark.sql.extensions=graft.plans.GraftExtensions
   * }}}
   * For sessions built elsewhere (the correctness driver's, notebooks),

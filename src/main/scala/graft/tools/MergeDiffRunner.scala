@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.merge.MergeListings
@@ -23,10 +23,7 @@ object MergeDiffRunner {
 
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val nBatches = new java.io.File(dir).listFiles()
       .count(_.getName.startsWith("batch_"))

@@ -2,79 +2,76 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Bench, GraftSession, SparkEntry}
 import scala.collection.mutable.ArrayBuffer
 
-/** Dev tool: batch sibling of [[QStages]] — profiles SEVERAL queries in
-  * one JVM (stage-listener attribution is ~40 s of sbt+session start
-  * per run otherwise). For each query: warm rep at the target sf, then
-  * a timed rep reporting wall, job/stage counts, the wall covered by
-  * stages vs spent OUTSIDE any stage (driver planning, stream
-  * machinery, parquet commits), and the top stages by task time.
+/** Dev tool: profiles a comma list of queries IN ORDER in one JVM, in
+  * Bench's session (same core count, same optimizer extensions). For
+  * each query it prints the driver/execution split (build, analyze,
+  * optimize, plan, exec), the job and stage counts, the top stages by
+  * task time, and the `plan2` fingerprint; after the last query it
+  * prints that query's normalized executed-plan text.
+  *
+  * Every query runs once, so list a query twice ("q48,q48") to see it
+  * warm. Running the tool with two different PREFIX lists and diffing
+  * the output is the minimal reproduction of a context-sensitive
+  * fingerprint (plan_diff's KNOWN_MULTISTABLE entries).
+  *
   * Usage: runMain graft.tools.QProfile <q1,q2,...> [sfDir]
   */
 object QProfile {
+  private case class Stage(id: Int, tasks: Int, wallMs: Long, taskMs: Long,
+    gcMs: Long, name: String)
+
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     graft.plans.GraftExtensions.register(spark)
-    case class St(id: Int, nTasks: Int, sub: Long, done: Long,
-      taskMs: Long, gcMs: Long, name: String)
-    val stages = ArrayBuffer[St]()
+    val stages = ArrayBuffer[Stage]()
     var jobs = 0
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         stages.synchronized { jobs += 1 }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val i = e.stageInfo
+        val wall = (for (a <- i.completionTime; b <- i.submissionTime)
+          yield a - b).getOrElse(-1L)
         stages.synchronized {
-          stages += St(i.stageId, i.numTasks,
-            i.submissionTime.getOrElse(-1L), i.completionTime.getOrElse(-1L),
+          stages += Stage(i.stageId, i.numTasks, wall,
             i.taskMetrics.executorRunTime, i.taskMetrics.jvmGCTime, i.name)
         }
       }
     })
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      try fn(spark, sfDir).count() catch { case e: Throwable =>
-        println(s"[qprofile] $name warm failed: ${e.getClass.getName}") }
-      spark.catalog.clearCache()
       stages.synchronized { stages.clear(); jobs = 0 }
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val t1 = System.nanoTime()
+      df.queryExecution.assertAnalyzed()
+      val t2 = System.nanoTime()
+      df.queryExecution.optimizedPlan
+      val t3 = System.nanoTime()
+      df.queryExecution.executedPlan
+      val t4 = System.nanoTime()
+      val rows = df.count()
+      val t5 = System.nanoTime()
       Thread.sleep(700) // listener delivery is async
+      def s(a: Long, b: Long) = f"${(b - a) / 1e9}%.2f"
       val (ss, nj) = stages.synchronized { (stages.toVector, jobs) }
-      // wall covered by at least one running stage (merge intervals)
-      val iv = ss.filter(s => s.sub > 0 && s.done > 0)
-        .map(s => (s.sub, s.done)).sortBy(_._1)
-      var covered = 0L; var curS = -1L; var curE = -1L
-      iv.foreach { case (a, b) =>
-        if (a > curE) { covered += curE - curS; curS = a; curE = b }
-        else if (b > curE) curE = b
+      println(s"[qprofile] $name rows=$rows build=${s(t0, t1)} " +
+        s"analyze=${s(t1, t2)} optimize=${s(t2, t3)} plan=${s(t3, t4)} " +
+        s"exec=${s(t4, t5)} total=${s(t0, t5)} jobs=$nj stages=${ss.size} " +
+        f"task=${ss.map(_.taskMs).sum / 1e3}%.1f gc=${ss.map(_.gcMs).sum / 1e3}%.1f " +
+        s"plan2=${Bench.planFingerprint2(df)}")
+      ss.sortBy(-_.taskMs).take(6).foreach { st =>
+        println(f"[qprofile]   stage=${st.id}%4d tasks=${st.tasks}%4d " +
+          f"wall=${st.wallMs}%6d ms task=${st.taskMs}%7d ms " +
+          f"gc=${st.gcMs}%5d ms ${st.name.take(90)}")
       }
-      covered += (if (curE > curS) curE - curS else 0L)
-      val taskS = ss.map(_.taskMs).sum / 1000.0
-      val gcS = ss.map(_.gcMs).sum / 1000.0
-      println(f"[qprofile] $name rows=$n wall=$wall%.2f jobs=$nj " +
-        f"stages=${ss.size} stageCovered=${covered / 1000.0}%.2f " +
-        f"gap=${wall - covered / 1000.0}%.2f task=$taskS%.1f gc=$gcS%.1f")
-      ss.sortBy(-_.taskMs).take(6).foreach { s =>
-        val w = s.done - s.sub
-        println(f"[qprofile]   stage=${s.id}%4d tasks=${s.nTasks}%4d " +
-          f"wall=$w%5d ms task=${s.taskMs}%7d ms gc=${s.gcMs}%5d " +
-          s.name.take(90))
-      }
-      spark.catalog.clearCache()
+      if (name == names.last)
+        println(Bench.normalizePlanText(df.queryExecution.executedPlan.toString))
+      Bench.cleanUp(spark)
     }
     spark.stop()
   }

@@ -66,119 +66,6 @@ class BenchContractSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"queries without oracle SQL: $missing")
   }
 
-  test("twin map takes min per name across all reps and retries " +
-      "(r9 finding)") {
-    val sf = "/root/testdata/sf0.1"
-    val lines = Seq(
-      s"""{"ctx":"start","load_avg":0.5,"sf_dir":"$sf"}""",
-      """{"q":"q1","name":"q1_agg","sec":4.200,"task_ms":10}""",
-      // a worse retry rep must NOT become the twin (the old .toMap
-      // kept the LAST line): the min wins...
-      """{"q":"q1","name":"q1_agg","sec":9.000,"retry_of":4.200}""",
-      // ...and when the FIRST rep was the load spike, the retry line
-      // holds the only clean measurement — it must count too
-      """{"q":"q3","name":"q3_join","sec":14.000,"task_ms":10}""",
-      """{"q":"q3","name":"q3_join","sec":1.500,"retry_of":14.000}""",
-      // median-rep lines: the MIN wins, not the last
-      """{"q":"q2","name":"q2_scan","sec":2.000,"rep":1}""",
-      """{"q":"q2","name":"q2_scan","sec":1.000,"rep":2}""",
-      """{"q":"q2","name":"q2_scan","sec":3.000,"rep":3}""",
-      s"""{"ctx":"end","load_avg":0.6,"sf_dir":"$sf"}""")
-    val twins = Bench.parseTwins(lines, sf)
-    assert(twins == Map("q1_agg" -> 4.2, "q2_scan" -> 1.0,
-      "q3_join" -> 1.5))
-  }
-
-  test("twins only apply when the prior capture's sf_dir matches") {
-    val lines = Seq(
-      """{"ctx":"start","load_avg":0.5,"sf_dir":"/root/testdata/sf0.01"}""",
-      """{"q":"q1","name":"q1_agg","sec":0.400}""")
-    // a dev run at another scale factor must not arm the 3x guard
-    assert(Bench.parseTwins(lines, "/root/testdata/sf0.1").isEmpty)
-    assert(Bench.parseTwins(lines, "/root/testdata/sf0.01")
-      == Map("q1_agg" -> 0.4))
-    // a file with no ctx line at all (pre-r5 format) yields no twins
-    assert(Bench.parseTwins(
-      Seq("""{"q":"q1","name":"q1_agg","sec":0.400}"""),
-      "/root/testdata/sf0.1").isEmpty)
-  }
-
-  test("code-state suspect flag: fires on the C2-deopt signature only " +
-      "(task_ms ≈ wall, zero GC, >2x twin)") {
-    // the SCALING.md q64 episode verbatim: 10.4 s against a 2.2 s
-    // twin, task time ≈ wall (one effectively-serial JVM), no task GC
-    assert(Bench.suspectCodeState(10.4, Some(2.2),
-      taskMs = 10300, gcMs = 0))
-    // ambient-LOAD spike: same slowdown but 32 busy cores → task_ms
-    // ≫ wall — NOT code-state (the twin retry guard owns this mode)
-    assert(!Bench.suspectCodeState(10.4, Some(2.2),
-      taskMs = 180000, gcMs = 0))
-    // GC-pressure mode: heavy task GC — not code-state either
-    assert(!Bench.suspectCodeState(10.4, Some(2.2),
-      taskMs = 10300, gcMs = 4000))
-    // within the twin band: never suspect, whatever the shape
-    assert(!Bench.suspectCodeState(2.5, Some(2.2),
-      taskMs = 2400, gcMs = 0))
-    // sub-second absolute excess: jitter, not a mode
-    assert(!Bench.suspectCodeState(0.9, Some(0.3),
-      taskMs = 900, gcMs = 0))
-    // no twin → nothing to adjudicate against
-    assert(!Bench.suspectCodeState(10.4, None,
-      taskMs = 10300, gcMs = 0))
-  }
-
-  test("twin task_ms rides the min-sec (clean) rep, not the last line") {
-    val sf = "/root/testdata/sf0.1"
-    val lines = Seq(
-      s"""{"ctx":"start","load_avg":0.5,"sf_dir":"$sf"}""",
-      // the load-spike rep carries inflated task CPU; the clean retry's
-      // task_ms must become the parallel-signature baseline
-      """{"q":"q9","name":"q9_x","sec":14.000,"task_ms":180000}""",
-      """{"q":"q9","name":"q9_x","sec":1.500,"task_ms":2500,"retry_of":14.000}""",
-      // a line with no task_ms at all parses as 0 (pre-r13 files)
-      """{"q":"q8","name":"q8_y","sec":2.000}""",
-      s"""{"ctx":"end","load_avg":0.6,"sf_dir":"$sf"}""")
-    val stats = Bench.parseTwinStats(lines, sf)
-    assert(stats("q9_x") == ((1.5, 2500L)))
-    assert(stats("q8_y") == ((2.0, 0L)))
-    // parseTwins stays the seconds view of the same fold
-    assert(Bench.parseTwins(lines, sf) ==
-      Map("q9_x" -> 1.5, "q8_y" -> 2.0))
-  }
-
-  test("parallel-shape code-state flag: fires on per-task-CPU " +
-      "multiplication in a widened (task_ms >> wall) query") {
-    // the q99 episode verbatim: 6.27 s against a 2.41 s twin, 66 s of
-    // task CPU against the twin's 2.5 s, negligible GC — parallel
-    // shape, so the serial signature stays silent but this one fires
-    assert(Bench.suspectCodeStateParallel(6.27, Some(2.41),
-      taskMs = 66000, twinTaskMs = Some(2500), gcMs = 300))
-    assert(!Bench.suspectCodeState(6.27, Some(2.41),
-      taskMs = 66000, gcMs = 300))
-    // wall over the twin but task CPU in line with it: scheduling /
-    // ambient delay, not a code-state mode
-    assert(!Bench.suspectCodeStateParallel(6.27, Some(2.41),
-      taskMs = 66000, twinTaskMs = Some(40000), gcMs = 300))
-    // serial shape (task_ms ≈ wall) belongs to suspectCodeState — the
-    // two signatures are mutually exclusive by construction
-    assert(!Bench.suspectCodeStateParallel(10.4, Some(2.2),
-      taskMs = 10300, twinTaskMs = Some(2000), gcMs = 0))
-    assert(Bench.suspectCodeState(10.4, Some(2.2),
-      taskMs = 10300, gcMs = 0))
-    // GC-pressure mode: >10% of task time in GC is its own story
-    assert(!Bench.suspectCodeStateParallel(6.27, Some(2.41),
-      taskMs = 66000, twinTaskMs = Some(2500), gcMs = 20000))
-    // no twin task baseline (pre-r13 capture, task_ms absent → 0):
-    // nothing to adjudicate against — never fires
-    assert(!Bench.suspectCodeStateParallel(6.27, Some(2.41),
-      taskMs = 66000, twinTaskMs = Some(0L), gcMs = 300))
-    assert(!Bench.suspectCodeStateParallel(6.27, Some(2.41),
-      taskMs = 66000, twinTaskMs = None, gcMs = 300))
-    // within the twin wall band: whatever the CPU shape, not suspect
-    assert(!Bench.suspectCodeStateParallel(2.5, Some(2.41),
-      taskMs = 66000, twinTaskMs = Some(2500), gcMs = 300))
-  }
-
   test("per-rep ambient stamps ride every perf line (r12 verdict #5): " +
       "load_avg and heap_free_mb are part of the line contract") {
     def f3(v: Double): String =
@@ -194,16 +81,10 @@ class BenchContractSpec extends AnyFunSuite {
     // to 0 instead of emitting a negative stamp
     assert(Bench.ambientStamp(-1.0, 100L, f3)
       == ""","load_avg":0.000,"heap_free_mb":100""")
-    // parseTwinStats tolerates the stamp riding a query line (the sec
-    // and task_ms regexes must not be confused by the new keys)
-    val sf = "/root/testdata/sf0.1"
-    val line = """{"q":"q1","name":"q1_agg","sec":1.500,"build_sec":0.100,""" +
-      """"task_ms":2500,"gc_ms":10,"plan":"abcdef012345","shuf_r":1,""" +
-      """"shuf_w":1,"spill":0,"tasks":4,"heap_mb":100""" + stamp +
-      ""","store_mb":0,"store_rdds":0}"""
-    val twins = Bench.parseTwinStats(Seq(
-      s"""{"ctx":"start","load_avg":0.5,"sf_dir":"$sf"}""", line), sf)
-    assert(twins == Map("q1_agg" -> ((1.5, 2500L))))
+    // the stamp rides the emitted perf line verbatim
+    val rep = Bench.Rep(1.5, 0.1, 2500L, 10L, "abcdef012345", 1L, 1L, 0L,
+      4L, 100L, 0.75, 14000L, 0L, 0)
+    assert(Bench.perfLine("q1", "q1_agg", Seq(rep)).contains(stamp))
   }
 
   test("structural fingerprint (plan2): invariant under union sibling " +
@@ -219,8 +100,10 @@ class BenchContractSpec extends AnyFunSuite {
     val ab = a.union(b)
     val ba = b.union(a)
     assert(Bench.planFingerprint2(ab) == Bench.planFingerprint2(ba))
-    assert(Bench.planFingerprint(ab) != Bench.planFingerprint(ba),
-      "text fingerprints coinciding would make this test vacuous")
+    def planText(df: org.apache.spark.sql.DataFrame): String =
+      Bench.normalizePlanText(df.queryExecution.executedPlan.toString)
+    assert(planText(ab) != planText(ba),
+      "plan texts coinciding would make this test vacuous")
     // ...but a genuinely different child is a different plan
     val c = spark.range(20).toDF("x").filter(col("x") > 9)
     assert(Bench.planFingerprint2(ab) != Bench.planFingerprint2(a.union(c)))
@@ -262,36 +145,30 @@ class BenchContractSpec extends AnyFunSuite {
     assert(Bench.planFingerprint2(build()) == fp1)
   }
 
-  test("median-of-3 publishes the middle rep and carries ITS suspect " +
-      "flag into the auto-probe decision") {
-    import Bench.RepResult
-    // the one-off spike is the discarded extreme — its flag dies with it
-    val spiked = Seq(RepResult(1.0, false), RepResult(1.2, false),
-      RepResult(9.7, true))
-    assert(Bench.medianRep(spiked) == RepResult(1.2, false))
-    // a real code-state episode shows in the middle rep → probe fires
-    val stuck = Seq(RepResult(9.1, true), RepResult(9.4, true),
-      RepResult(1.3, false))
-    assert(Bench.medianRep(stuck) == RepResult(9.1, true))
-    // deterministic on exact ties: the sort is stable, so the middle
-    // INPUT position is published
-    assert(Bench.medianRep(Seq(RepResult(2.0, false), RepResult(2.0, true),
-      RepResult(2.0, false))).suspect)
-    assert(!Bench.medianRep(Seq(RepResult(2.0, true), RepResult(2.0, false),
-      RepResult(2.0, true))).suspect)
-  }
-
-  test("probe command is a fresh isolated JVM: own BENCH_ONLY, same " +
-      "sf/cpus, recursion-proof") {
-    val (argv, env) = Bench.probeCommand("a.jar:b.jar",
-      "q109_incremental_dedup", "/root/testdata/sf0.1", "32")
-    assert(argv.head.endsWith("/bin/java"))
-    assert(argv.contains("graft.Bench"))
-    assert(argv.contains("a.jar:b.jar"))
-    assert(env("SPARK_GRAFT_BENCH_ONLY") == "q109_incremental_dedup")
-    assert(env("SPARK_GRAFT_SF_DIR") == "/root/testdata/sf0.1")
-    assert(env("SPARK_GRAFT_CPUS") == "32")
-    // the child must never probe ITS suspects
-    assert(env("SPARK_GRAFT_PROBE") == "1")
+  test("per-query perf line publishes the median of 3 reps with sec_min " +
+      "and sec_max, the median rep's fields, ambient stamps and plan2") {
+    def rep(secs: Double, build: Double, plan2: String, load: Double) =
+      Bench.Rep(secs, build, taskMs = (secs * 1000).toLong, gcMs = 3L,
+        plan2 = plan2, shufR = 7L, shufW = 7L, spill = 0L, tasks = 5L,
+        heapMb = 300L, loadAvg = load, heapFreeMb = 9000L, storeMb = 1L,
+        storeRdds = 2)
+    // a cold first rep is the max and is discarded by the median
+    val reps = Seq(rep(4.6, 3.9, "aaaaaaaaaaaa", 0.5),
+      rep(1.2, 0.3, "bbbbbbbbbbbb", 1.25), rep(1.0, 0.2, "cccccccccccc", 2.0))
+    assert(Bench.median(reps) == reps(1))
+    val line = Bench.perfLine("q50", "q50_x", reps)
+    def num(key: String): Double =
+      ("\"" + key + "\":(-?[0-9.]+)").r.findFirstMatchIn(line).get
+        .group(1).toDouble
+    assert(num("sec") == 1.2 && num("sec_min") == 1.0 && num("sec_max") == 4.6)
+    assert(num("sec_min") <= num("sec") && num("sec") <= num("sec_max"))
+    // every other field comes from the published (median) rep
+    assert(num("build_sec") == 0.3 && num("task_ms") == 1200)
+    assert(line.contains(""""plan2":"bbbbbbbbbbbb""""))
+    assert(line.contains(Bench.ambientStamp(1.25, 9000L, Bench.f3)))
+    assert(line.startsWith("""{"q":"q50","name":"q50_x","sec":1.200,"""))
+    // one line per query: no per-rep or retry fields survive
+    assert(!line.contains("\"rep\"") && !line.contains("retry_of") &&
+      !line.contains("suspect") && !line.contains("\"plan\""))
   }
 }

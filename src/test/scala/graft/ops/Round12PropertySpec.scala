@@ -37,7 +37,7 @@ class Round12PropertySpec extends SparkSpec {
       matched.toString)
   }
 
-  test("planFingerprint: invariant across rebuilds of the same query " +
+  test("planFingerprint2: invariant across rebuilds of the same query " +
       "(exprIds normalized away), distinct for a different plan") {
     val d = "/root/testdata/sf0.001"
     def built(): org.apache.spark.sql.DataFrame = {
@@ -46,8 +46,8 @@ class Round12PropertySpec extends SparkSpec {
       df.count() // finalize the adaptive plan before fingerprinting
       df
     }
-    val a = graft.Bench.planFingerprint(built())
-    val b = graft.Bench.planFingerprint(built())
+    val a = graft.Bench.planFingerprint2(built())
+    val b = graft.Bench.planFingerprint2(built())
     // two builds allocate different expression ids — the normalized
     // fingerprint must not see them
     assert(a == b)
@@ -63,8 +63,8 @@ class Round12PropertySpec extends SparkSpec {
       df.count()
       df
     }
-    assert(graft.Bench.planFingerprint(builtDedup()) ==
-      graft.Bench.planFingerprint(builtDedup()))
+    assert(graft.Bench.planFingerprint2(builtDedup()) ==
+      graft.Bench.planFingerprint2(builtDedup()))
     // ...and the typed-API case: MapPartitions nodes print the closure
     // as Class$$Lambda$<classload-order>/0x<addr>@<instance-hash> —
     // all three vary per rep/JVM and must normalize away (q171's three
@@ -78,14 +78,14 @@ class Round12PropertySpec extends SparkSpec {
       df.count()
       df
     }
-    assert(graft.Bench.planFingerprint(builtMapPartitions()) ==
-      graft.Bench.planFingerprint(builtMapPartitions()))
+    assert(graft.Bench.planFingerprint2(builtMapPartitions()) ==
+      graft.Bench.planFingerprint2(builtMapPartitions()))
     assert(a.length == 12 && a.forall(c => c.isDigit || ('a' to 'f')
       .contains(c)), a)
     val other = graft.model.Tables.documents(spark, d)
       .filter(col("n_chars") > 100).select(col("doc_id"))
     other.count()
-    assert(graft.Bench.planFingerprint(other) != a)
+    assert(graft.Bench.planFingerprint2(other) != a)
   }
 
   test("driver-local union-find equals both distributed CC loops on " +

@@ -8,11 +8,10 @@ delta (worst first):
 
     name  sec_a  sec_b  ratio  plan   flag
 
-`plan` is `same` / `CHANGED` / `?` (fingerprint missing on either
-side — pre-r12 capture). Since r14 the compare PREFERS the structural
-`plan2` fingerprint when both sides carry it (canonical under union
-sibling order — the q334 multistability fix) and falls back to the
-text `plan` against older captures.
+`plan` compares the structural `plan2` fingerprint (canonical under
+union sibling order — the q334 multistability fix): `same` /
+`CHANGED` / `?` (plan2 missing on either side — a pre-r14 capture or a
+failed query).
 
 `flag` marks REGRESSED rows by the house convention (>1.5x with
 >0.5 s excess, b vs a). Since r14 a regressed SAME-plan row is
@@ -26,9 +25,10 @@ the "driver number up, plans same, box was busy" analysis, now one
 output column instead of a manual per-rep read. A CHANGED-plan row
 never gets the ambient label — a plan change is real at any load.
 
-Per-name seconds are the MIN across all of a query's lines (retries
-and median reps included — the Bench.parseTwins convention), and the
-fingerprint + load stamp ride that min-sec line.
+Bench writes ONE line per query (the median of three reps, with
+sec_min/sec_max), so each name's line is read as is. Older captures
+wrote a line per rep and per retry; for those the LAST line of a name
+wins and the tool prints how many names repeated.
 
 Totals: printed over the INTERSECTION of query names (comparable even
 when the query sets differ — r13 ADVICE #2) alongside the full-file
@@ -50,7 +50,7 @@ import sys
 
 # Queries whose executed plan is KNOWN-MULTISTABLE across execution
 # contexts for reasons the structural fingerprint cannot canonicalize,
-# each with a graft.tools.PlanProbe reproduction on record. A CHANGED
+# each with a graft.tools.QProfile reproduction on record. A CHANGED
 # verdict for these prints `multi*` instead — the known benign flip —
 # and regression flags treat them as same-plan. Entries require a
 # reproduction, not a hunch:
@@ -58,16 +58,16 @@ import sys
 #    two exact countDistinct groups by expression-set iteration order,
 #    which depends on how many expression ids earlier queries in the
 #    JVM consumed — the two plans are the same tree with gid 1 and 2
-#    (and the matching grouping-key order) swapped. Reproduced r14:
-#    PlanProbe "q69_sketch_stats" vs "q21_dedup_exact,q69_sketch_stats"
-#    flips both fingerprints; the normalized texts differ ONLY in the
-#    gid interlock.
+#    (and the matching grouping-key order) swapped. Reproduce with
+#    `runMain graft.tools.QProfile q69_sketch_stats <sf>` vs
+#    `... q21_dedup_exact,q69_sketch_stats <sf>`: plan2 flips and the
+#    printed normalized texts differ ONLY in the gid interlock.
 KNOWN_MULTISTABLE = {"q69_sketch_stats"}
 
 
 def load(path):
-    """name -> (min sec, plan, plan2, load_avg of the min-sec line),
-    plus the file's sf_dir and its LAUNCH load (first ctx line).
+    """name -> (sec, plan2, load_avg), plus the file's sf_dir, its
+    LAUNCH load (first ctx line) and the number of repeated names.
 
     sf-gated like Bench.parseTwins (r13 review): a BENCH_PERF file can
     contain appended dev runs at another scale factor whose ctx line
@@ -75,11 +75,12 @@ def load(path):
     plan" deltas that are pure scale artifacts. Only lines captured
     under the file's FIRST ctx sf_dir count.
     """
+    repeated = set()
     with open(path) as f:
-        return load_lines(f)
+        return (*load_lines(f, repeated), len(repeated))
 
 
-def load_lines(lines):
+def load_lines(lines, repeated=None):
     best = {}
     file_sf = None
     launch_load = None
@@ -99,22 +100,18 @@ def load_lines(lines):
             continue
         if current_sf != file_sf:
             continue
-        cur = best.get(d["name"])
-        if cur is None or d["sec"] < cur[0]:
-            best[d["name"]] = (d["sec"], d.get("plan", ""),
-                               d.get("plan2", ""), d.get("load_avg"))
+        if repeated is not None and d["name"] in best:
+            repeated.add(d["name"])
+        best[d["name"]] = (d["sec"], d.get("plan2", ""), d.get("load_avg"))
     return best, file_sf, launch_load
 
 
-def plan_verdict(name, pa, p2a, pb, p2b):
-    """Prefer the structural fingerprint when BOTH sides carry it; a
-    CHANGED verdict on a pinned multistable query reads `multi*`."""
-    if p2a and p2b:
-        v = "same" if p2a == p2b else "CHANGED"
-    elif not pa or not pb:
+def plan_verdict(name, p2a, p2b):
+    """Structural fingerprint compare; a CHANGED verdict on a pinned
+    multistable query reads `multi*`."""
+    if not p2a or not p2b:
         return "?"
-    else:
-        v = "same" if pa == pb else "CHANGED"
+    v = "same" if p2a == p2b else "CHANGED"
     if v == "CHANGED" and name in KNOWN_MULTISTABLE:
         return "multi*"
     return v
@@ -136,12 +133,12 @@ def flag_for(sa, sb, load_a, load_b, plan, ctx_delta):
 def diff_rows(a, b, ctx_delta=0.0):
     rows = []
     for name in sorted(set(a) | set(b)):
-        sa, pa, p2a, la = a.get(name, (None, "", "", None))
-        sb, pb, p2b, lb = b.get(name, (None, "", "", None))
+        sa, p2a, la = a.get(name, (None, "", None))
+        sb, p2b, lb = b.get(name, (None, "", None))
         if sa is None or sb is None:
             rows.append((float("inf"), name, sa, sb, "only-one-side", ""))
             continue
-        plan = plan_verdict(name, pa, p2a, pb, p2b)
+        plan = plan_verdict(name, p2a, p2b)
         rows.append((abs(sb - sa), name, sa, sb, plan,
                      flag_for(sa, sb, la, lb, plan, ctx_delta)))
     rows.sort(key=lambda r: -r[0])
@@ -156,7 +153,11 @@ def main(argv):
     if len(paths) != 2:
         print(__doc__)
         return 2
-    (a, sf_a, la), (b, sf_b, lb) = load(paths[0]), load(paths[1])
+    (a, sf_a, la, ra), (b, sf_b, lb, rb) = load(paths[0]), load(paths[1])
+    for path, r in ((paths[0], ra), (paths[1], rb)):
+        if r:
+            print(f"NOTE: {path} repeats {r} query names (a per-rep "
+                  f"capture) — the last line of each is read.\n")
     if sf_a != sf_b:
         print(f"WARNING: captures are at different scale factors "
               f"({sf_a} vs {sf_b}) — seconds are not comparable.\n")
@@ -185,7 +186,7 @@ def main(argv):
     shared = set(a) & set(b)
     ta = sum(a[n][0] for n in shared)
     tb = sum(b[n][0] for n in shared)
-    print(f"\n{shown} rows shown ({len(rows)} joined); min-sec totals "
+    print(f"\n{shown} rows shown ({len(rows)} joined); totals "
           f"over the {len(shared)} shared queries: a={ta:.1f}s "
           f"b={tb:.1f}s")
     if shared != set(a) or shared != set(b):
@@ -211,14 +212,15 @@ def selftest():
             d["load_avg"] = load
         return json.dumps(d)
 
-    # plan2 preferred over plan; fallback when one side lacks it
+    # plan2 alone decides; the text plan is ignored, and a side
+    # without plan2 reads `?`
     a, _, _ = load_lines([ctx, line("q1", 1.0, "AAA", "S1", 0.5),
                           line("q2", 1.0, "BBB", "", 0.5)])
     b, _, _ = load_lines([ctx, line("q1", 1.0, "ZZZ", "S1", 0.5),
                           line("q2", 1.0, "BBB", "S9", 0.5)])
     rows = {r[1]: r for r in diff_rows(a, b)}
     assert rows["q1"][4] == "same", "plan2 agreement must win over plan text"
-    assert rows["q2"][4] == "same", "missing plan2 on one side falls back"
+    assert rows["q2"][4] == "?", "missing plan2 on one side is unknown"
 
     # ambient auto-label trigger 1 (rep stamp): regressed + rep load
     # >2 above the twin's → REGRESSED-ambient; comparable load keeps
@@ -250,10 +252,13 @@ def selftest():
     assert rows["q69_sketch_stats"][4] == "multi*"
     assert rows["q69_sketch_stats"][5] == "REGRESSED-ambient"
 
-    # min-sec still wins across retries, and its line's stamp rides
-    a, _, _ = load_lines([ctx, line("q5", 5.0, "P", "S", 9.0),
-                          line("q5", 1.0, "P", "S", 0.4)])
-    assert a["q5"] == (1.0, "P", "S", 0.4), a["q5"]
+    # one line per query: a repeated name (a per-rep capture) keeps
+    # its last line, stamp included, and is counted
+    seen = set()
+    a, _, _ = load_lines([ctx, line("q5", 1.0, "P", "S", 0.4),
+                          line("q5", 5.0, "P", "S", 9.0)], seen)
+    assert a["q5"] == (5.0, "S", 9.0), a["q5"]
+    assert seen == {"q5"}
 
     # launch load comes off the FIRST ctx line only
     _, sf, ll = load_lines(
