@@ -41,9 +41,12 @@ object Bench {
     String.format(java.util.Locale.ROOT, "%.3f", java.lang.Double.valueOf(v))
 
   /** The per-run-identifier normalization under [[planFingerprint2]]:
-    * expression ids, lambda counters, plan ids, closure names, and the
-    * streaming harness's UUID sinks and temp paths. */
-  private[graft] def normalizePlanText(s: String): String = s
+    * expression ids, lambda counters, plan ids, closure names, the
+    * streaming harness's UUID sinks and temp paths, and the checkout
+    * directory `cwd` (fixture sources print their absolute path). */
+  private[graft] def normalizePlanText(s: String,
+      cwd: String = System.getProperty("user.dir")): String = s
+    .replace(cwd, "<cwd>")
     .replaceAll("#\\d+", "#")
     .replaceAll("_\\d+#", "#") // lambda variable counters (x_3 → x)
     .replaceAll("plan_id=\\d+", "plan_id=")

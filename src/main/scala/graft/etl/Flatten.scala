@@ -80,12 +80,13 @@ object Flatten {
       .withColumns(Map(
         "_title" -> Functions.parseOfferTitle(col("title")),
         "_stats" -> Functions.parseOfferStats(col("offer_stats")),
-        "_geo" -> Functions.geoFromItems(col("address_items"))))
+        "_geo_roles" -> Functions.geoRoles(col("address_items"))))
       .withColumns(Map(
+        "_geo" -> Functions.geoFromRoles(col("_geo_roles")),
         "_floor" -> Functions.parseFloor(
-          coalesce(mapped("floor_combined"), col("_title").getField("floor"))),
-        "_street" -> Functions.normalizeStreetNames(
-          col("_geo").getField("street"))))
+          coalesce(mapped("floor_combined"), col("_title").getField("floor")))))
+      .withColumn("_street",
+        Functions.normalizeStreetNames(col("_geo").getField("street")))
 
     val titleInfo = col("_title")
     val stats = col("_stats")

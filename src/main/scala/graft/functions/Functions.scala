@@ -223,13 +223,13 @@ object Functions {
   // items: array<struct<text string, href string>> in page order. The
   // reference walks the list and (per role) lets the LAST matching item
   // win via dict overwrite; positions 0/1/2 carry special meaning.
-  def geoFromItems(items: Column): Column = {
-    val indexed = zip_with(items, sequence(lit(0), size(items) - 1),
-      (it, i) => struct(
-        trim(coalesce(it.getField("text"), lit(""))).as("text"),
-        coalesce(it.getField("href"), lit("")).as("href"),
-        i.as("i")))
+  def geoFromItems(items: Column): Column = geoFromRoles(geoRoles(items))
 
+  /** F14, first half: each item's single role (city, district,
+    * neighborhood, street, building, metro or skip), with its trimmed
+    * text and href. Every regex runs once per item here, so a caller
+    * that hoists this column pays for it once per row. */
+  def geoRoles(items: Column): Column = {
     val distCond = (h: Column) =>
       h.contains("district%5B0%5D=") || h.rlike("-04\\d+/?$")
     val streetCond = (h: Column) =>
@@ -238,20 +238,26 @@ object Functions {
       h.rlike("house%5B0%5D=\\d+") || h.rlike("/dom/.*-\\d+/?$")
 
     // elif-chain → a single role per item, honoring reference priority
-    def roleOf(x: Column): Column = {
-      val t = x.getField("text"); val h = x.getField("href")
-      val i = x.getField("i")
-      when(t === "", lit("skip"))
-        .when(i === 0, lit("city"))
-        .when(i === 1 && distCond(h), lit("district"))
-        .when(i === 2 && distCond(h), lit("neighborhood"))
-        .when(streetCond(h), lit("street"))
-        .when(buildCond(h), lit("building"))
-        .when(h.contains("metro%5B0%5D="), lit("metro"))
-        .otherwise(lit("skip"))
-    }
+    zip_with(items, sequence(lit(0), size(items) - 1), (it, i) => {
+      val t = trim(coalesce(it.getField("text"), lit("")))
+      val h = coalesce(it.getField("href"), lit(""))
+      struct(t.as("text"), h.as("href"),
+        when(t === "", lit("skip"))
+          .when(i === 0, lit("city"))
+          .when(i === 1 && distCond(h), lit("district"))
+          .when(i === 2 && distCond(h), lit("neighborhood"))
+          .when(streetCond(h), lit("street"))
+          .when(buildCond(h), lit("building"))
+          .when(h.contains("metro%5B0%5D="), lit("metro"))
+          .otherwise(lit("skip")).as("role"))
+    })
+  }
+
+  /** F14, second half: the geo struct from [[geoRoles]]' output, the
+    * last item of each role winning. */
+  def geoFromRoles(roled: Column): Column = {
     def lastOf(role: String): Column =
-      try_element_at(filter(indexed, x => roleOf(x) === role), lit(-1))
+      try_element_at(filter(roled, x => x.getField("role") === role), lit(-1))
     def textOf(role: String): Column = lastOf(role).getField("text")
     def idOf(role: String, re1: String, re2: String): Column = {
       val h = lastOf(role).getField("href")

@@ -15,9 +15,11 @@ import org.apache.spark.sql.DataFrame
   *    [[Dedup.crossCorpusJaccardPairs]], [[TextAnalysis.bigramFamiliarity]],
   *    [[TextAnalysis.stripBoilerplateLines]], [[TextAnalysis.tfIdfTop]],
   *    [[Packing.chunkAssignments]], [[Packing.globalRowNumber]],
-  *    [[graft.pipeline.Pipeline.processBatch]], and
-  *    [[graft.merge.MergeListings.mergeBatch]] when its url fallback
-  *    applies) are therefore actions, not plan constructors.
+  *    [[graft.pipeline.Pipeline.processBatch]],
+  *    [[graft.streaming.StreamingMerge.mergeIntoMaster]], and
+  *    [[graft.merge.MergeListings.mergeBatch]] only when its url fallback
+  *    applies and it generates the arrival ids itself, i.e. without a
+  *    `seqCol`) are therefore actions, not plan constructors.
   *  - **Block liveness**: the default `localCheckpoint` stores blocks on
   *    the executors that computed them. On a real cluster with executor
   *    loss or dynamic allocation, a lost block makes every downstream

@@ -13,11 +13,12 @@ import graft.parse.ListingParser
   * arrive as a (url, html) frame from any source (fixture dirs here;
   * the same shape a mapPartitions HTTP client would produce).
   *
-  * `processBatch` materializes the normalized batch (parse→flatten→
-  * normalize run as one job, once per page) before the merge, which
-  * reads it several times; only the merge shuffles (on offer_id). The
-  * master table at scale is Parquet partitioned by a stable hash of
-  * offer_id, making the per-batch merge join co-partitioned.
+  * An hour's eager work is one job: `processBatch` materializes the
+  * normalized batch (parse→flatten→normalize, once per page) with each
+  * row's arrival order. Everything after it, the unpublish markers, the
+  * MERGE and its url fallback, is one lazy plan that runs when the
+  * caller publishes; only the merge shuffles (on offer_id), and the
+  * master is hash-shuffled with it (ROADMAP item 1).
   */
 case class RawPage(url: String, html: String)
 
@@ -65,15 +66,15 @@ object Pipeline {
       (col("offer_id").isNotNull || col("offer_url").isNotNull))
 
   /** J3: ids active in the master but absent from the current search →
-    * synthetic unpublish markers (parse_data.py:344-348). */
-  def missingAsUnpublished(master: DataFrame, current: DataFrame): DataFrame = {
-    val activeIds = master
-      .filter(!coalesce(col("is_unpublished"), lit(false)))
-      .select(col("offer_id")).distinct()
-    activeIds.join(current.select(col("offer_id")).distinct(),
-        Seq("offer_id"), "left_anti")
+    * synthetic unpublish markers (parse_data.py:344-348). The master
+    * holds one row per offer_id, so its active keys need no `distinct`;
+    * duplicate batch keys on the broadcast side of the anti join change
+    * nothing. */
+  def missingAsUnpublished(master: DataFrame, current: DataFrame): DataFrame =
+    master.filter(!coalesce(col("is_unpublished"), lit(false)))
+      .select(col("offer_id"))
+      .join(broadcast(current.select(col("offer_id"))), Seq("offer_id"), "left_anti")
       .select(col("offer_id"), lit(true).as("is_unpublished"))
-  }
 
   /** Empty master table with the canonical normalized-listing schema
     * (derived from the parse→flatten→normalize chain itself — single
@@ -97,19 +98,27 @@ object Pipeline {
     * synthesize unpublish markers) → MERGE into the master.
     *
     * Eager: the normalized batch is materialized at call time, in one
-    * job that parses each page once. The merge reads the batch directly
-    * and through `missingAsUnpublished`, and every read of an
-    * unmaterialized batch would run the HTML parser again. */
+    * job that parses each page once and stamps each row's arrival order
+    * (`__arrival`). The merge reads the batch four times (its url
+    * fallback's three reads and `missingAsUnpublished`), and every read
+    * of an unmaterialized batch would run the HTML parser again. Given
+    * the arrival order, the merge needs no second materialization: the
+    * rest of the hour is one lazy plan. Unpublish markers arrive after
+    * every scraped row; their keys never occur in the batch, so their
+    * order against it does not matter. */
   def processBatch(spark: SparkSession, master: DataFrame,
       pages: Dataset[RawPage], asOf: Column, timestamp: String,
       updateUnpublishedBySearch: Boolean = true): DataFrame = {
-    val normalized = Materialize(normalizedBatch(spark, pages, asOf, timestamp))
+    val normalized = Materialize(normalizedBatch(spark, pages, asOf, timestamp)
+      .withColumn("__arrival", monotonically_increasing_id()))
     val batch =
       if (updateUnpublishedBySearch)
         normalized.unionByName(
-          missingAsUnpublished(master, normalized), allowMissingColumns = true)
+          missingAsUnpublished(master, normalized)
+            .withColumn("__arrival", lit(Long.MaxValue)),
+          allowMissingColumns = true)
       else normalized
-    MergeListings.mergeBatch(master, batch)
+    MergeListings.mergeBatch(master, batch, Some("__arrival"))
   }
 
   /** P3: active rows missing a price estimation → re-scrape work list
@@ -161,16 +170,15 @@ object Pipeline {
     * reference's pandas to_csv stringifies them); header CSV. */
   def writeCsv(df: DataFrame, path: String): Unit = {
     import org.apache.spark.sql.types._
-    val scrubbed = df.schema.fields.foldLeft(df) { (acc, f) =>
+    val scrubbed = df.select(df.schema.fields.map { f =>
       f.dataType match {
         case DoubleType | FloatType =>
-          acc.withColumn(f.name, when(isnan(col(f.name)), lit(null))
-            .otherwise(col(f.name)))
+          when(isnan(col(f.name)), lit(null)).otherwise(col(f.name)).as(f.name)
         case _: ArrayType | _: MapType | _: StructType =>
-          acc.withColumn(f.name, to_json(col(f.name)))
-        case _ => acc
+          to_json(col(f.name)).as(f.name)
+        case _ => col(f.name)
       }
-    }
+    }.toSeq: _*)
     scrubbed.write.mode("overwrite").option("header", "true")
       // RFC-4180 quote doubling: Spark's default backslash escaping makes
       // rows with embedded quotes unreadable to pandas/csv readers

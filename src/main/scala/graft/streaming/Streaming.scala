@@ -40,13 +40,18 @@ object StreamingMerge {
     * @param seqCol optional source column giving the deterministic fold
     *        order for multiple same-key rows inside one micro-batch (the
     *        reference folds listings in scrape order, merge.py:96-99)
+    *
+    * The merge's url fallback reads the micro-batch three times, so it
+    * is materialized once: here when `seqCol` is given (the merge then
+    * stays lazy), otherwise inside `mergeBatch` with its arrival ids.
     */
   def mergeIntoMaster(spark: SparkSession, batch: DataFrame,
       masterPath: String, seqCol: Option[String] = None): Unit = {
     val master = graft.io.AtomicParquet.read(spark, masterPath, batch)
+    val source = if (seqCol.isDefined) graft.ops.Materialize(batch) else batch
     // publish writes to tmp first (executing the plan while the master
     // path is still intact) and only then swaps — no checkpoint needed
-    val merged = graft.merge.MergeListings.mergeBatch(master, batch, seqCol)
+    val merged = graft.merge.MergeListings.mergeBatch(master, source, seqCol)
     graft.io.AtomicParquet.publish(merged, masterPath)
   }
 }

@@ -120,6 +120,16 @@ class BenchContractSpec extends AnyFunSuite {
     assert(Bench.planFingerprint2(ab).matches("[0-9a-f]{12}"))
   }
 
+  test("plan text does not depend on the checkout directory") {
+    // a fixture source prints its absolute directory in the scan node
+    def scan(root: String) =
+      s"BatchScan graft-html `$root/src/test/resources/fixtures`[url#12, html#13]"
+    val a = Bench.normalizePlanText(scan("/home/a/repo"), cwd = "/home/a/repo")
+    val b = Bench.normalizePlanText(scan("/srv/ci/checkout-2"), cwd = "/srv/ci/checkout-2")
+    assert(a == b)
+    assert(a == "BatchScan graft-html `<cwd>/src/test/resources/fixtures`[url#, html#]")
+  }
+
   test("plan2 is stable under exprId-width-driven scan-metadata " +
       "truncation (the q334/q316 mechanism, root-caused r14)") {
     val spark = TestSpark.spark

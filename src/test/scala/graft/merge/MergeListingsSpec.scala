@@ -167,4 +167,45 @@ class MergeListingsSpec extends SparkSpec {
     assert(once == twice)
     assert(once("total_price_changes") == null)
   }
+
+  test("the plan folds with one compiled function and keeps the full outer join") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
+    val tgt = MergeListings.mergeBatch(emptyTarget,
+      batch(Seq(("1", "u1", "2026-01-01 10:00:00", 100.0, false, "a", "t1"))))
+    val m = MergeListings.mergeBatch(tgt,
+      batch(Seq(("1", "u1", "2026-01-02 10:00:00", 90.0, false, "b", "t2"))))
+    assert(byId(m)("1")("price_changes") == "-10")
+    assert(!m.queryExecution.optimizedPlan.exists(
+      _.expressions.exists(_.exists(_.isInstanceOf[ArrayAggregate]))))
+    val plan = m.queryExecution.executedPlan.toString
+    assert(plan.contains("merge_fold(") && !plan.contains("aggregate("))
+    assert("SortMergeJoin.*FullOuter".r.findFirstIn(plan).isDefined, plan)
+  }
+
+  test("J2: an adopted orphan's map column keeps its key order") {
+    val withExtras = StructType(schema.fields :+
+      StructField("extras", MapType(StringType, StringType)))
+    def rows(rs: Row*) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rs), withExtras)
+    val tgt = MergeListings.mergeBatch(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], withExtras),
+      rows(Row("7", "url-7", "2026-01-01 10:00:00", 100.0, false, "a", "t1", null)))
+    val m = MergeListings.mergeBatch(tgt,
+      rows(Row(null, "url-7", "2026-01-05 09:00:00", null, null, null, null,
+        Map("z" -> "1", "a" -> "2"))))
+    assert(m.selectExpr("map_keys(extras)").head().getSeq[String](0) == Seq("z", "a"))
+  }
+
+  test("J2: orphans sharing one seq value each adopt their own key") {
+    val tgt = MergeListings.mergeBatch(emptyTarget, batch(Seq(
+      ("7", "url-7", "2026-01-01 10:00:00", 100.0, false, "a", "t1"),
+      ("8", "url-8", "2026-01-01 10:00:00", 200.0, false, "b", "t1"))))
+    val orphans = batch(Seq(
+      (null, "url-7", "2026-01-05 09:00:00", null, null, null, null),
+      (null, "url-8", "2026-01-05 09:00:00", null, null, null, null)))
+      .withColumn("seq", org.apache.spark.sql.functions.lit(1000L))
+    val m = byId(MergeListings.mergeBatch(tgt, orphans, Some("seq")))
+    assert(m.keySet == Set("7", "8"))
+    assert(m.values.forall(_("is_unpublished") == true))
+  }
 }

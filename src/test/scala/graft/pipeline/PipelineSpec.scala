@@ -239,6 +239,46 @@ class PipelineSpec extends SparkSpec {
     assert(rows("1002").getAs[String]("last_active") == "2026-08-11 09:15:00")
   }
 
+  test("the eager part of processBatch runs exactly one Spark job") {
+    val m = master
+    m.schema
+    val pages = spark.createDataset(Seq(hourPage))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val merged = try {
+      val out = Pipeline.processBatch(spark, m, pages, asOf, ts)
+      org.apache.spark.TestListenerBus.drain(sc)
+      out
+    } finally sc.removeSparkListener(listener)
+    // the materialized normalized batch; the merge itself stays lazy
+    assert(jobs.get == 1)
+    assert(merged.count() == 3)
+  }
+
+  test("the master keeps one row per offer_id across processBatch hours") {
+    // missingAsUnpublished relies on this instead of a distinct
+    val search = RawPage("https://www.cian.ru/cat.php?p=1", fixture("search_page.html"))
+    val listing = RawPage("https://www.cian.ru/rent/flat/1001/", fixture("listing_page.html"))
+    val hours = Seq(
+      Seq(search),
+      Seq(search, hourPage),   // 1001 twice in one batch, 1002/1003 once
+      Seq(listing, hourPage))  // 1002 leaves the search, 1001 twice
+    var m = Pipeline.emptyMaster(spark)
+    for ((pages, h) <- hours.zipWithIndex) {
+      m = Pipeline.processBatch(spark, m, spark.createDataset(pages), asOf, ts)
+        .localCheckpoint()
+      val keys = m.select("offer_id").as[String].collect()
+      assert(keys.length == keys.distinct.length, s"hour $h")
+      assert(keys.toSet == Set("1001", "1002", "1003"), s"hour $h")
+    }
+  }
+
   test("status column derives from is_unpublished (B4)") {
     val p = Pipeline.parsePages(spark,
       spark.createDataset(Seq(RawPage("https://www.cian.ru/rent/flat/5/",
