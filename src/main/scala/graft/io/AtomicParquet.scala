@@ -3,10 +3,13 @@ package graft.io
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** S7 atomic publish: write-tmp-then-swap directory rename — readers see
-  * the old or the new table, never a half-written one (the reference's
-  * whole-file-rewrite "transaction", parse_data.py:222). On a cluster a
-  * transactional table format replaces this; the call site is the seam.
+/** S7 atomic publish for the MASTER, a single table rewritten whole:
+  * write-tmp-then-swap directory rename — readers see the old or the
+  * new table, never a half-written one (the reference's
+  * whole-file-rewrite "transaction", parse_data.py:222). The
+  * append-structured artifacts (the dedup prefix index and span-gram
+  * state) publish through [[TableLog]] instead, which needs no
+  * directory swap.
   */
 object AtomicParquet {
 
@@ -23,29 +26,14 @@ object AtomicParquet {
       schemaSource.schema)
   }
 
-  def publish(df: DataFrame, path: String): Unit =
-    publishDir(df.sparkSession, path)(tmp =>
-      df.write.mode("overwrite").parquet(tmp))
-
-  /** The same write-tmp-then-swap transaction for a whole DIRECTORY of
-    * artifacts (r14 review): `write` populates `path__tmp` (several
-    * frames, a meta row — whatever the artifact is), then the swap
-    * renames it in as ONE unit. A multi-frame artifact published as N
-    * separate [[publish]] calls is only per-frame atomic — a crash (or
-    * a concurrent reader) between swaps sees frame k new and frame k+1
-    * old, which for an index silently breaks cross-frame invariants;
-    * this form closes that window. Reading the CURRENT `path` inside
-    * `write` is safe (the main dir is untouched until `write`
-    * returns), which is what makes read → merge → publish back to the
-    * same path sound. */
-  def publishDir(spark: SparkSession, path: String)(
-      write: String => Unit): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def publish(df: DataFrame, path: String): Unit = {
+    val fs = new Path(path).getFileSystem(
+      df.sparkSession.sparkContext.hadoopConfiguration)
     val main = new Path(path)
     val tmp = new Path(path + "__tmp")
     val old = new Path(path + "__old")
     if (fs.exists(tmp)) fs.delete(tmp, true) // debris from a dead writer
-    write(tmp.toString)
+    df.write.mode("overwrite").parquet(tmp.toString)
     // rename returns false instead of throwing (dest exists, cross-fs,
     // src missing) — continuing would delete the only good copy, so each
     // step is checked. A crash between the two renames leaves the intact

@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,18 +51,20 @@ object Compaction {
       targetRowsPerFile: Long): (Long, Int, Int) = {
     require(targetRowsPerFile >= 1,
       s"targetRowsPerFile must be >= 1, got $targetRowsPerFile")
-    def parquetFiles(p: String): Int = {
-      val d = new java.io.File(p)
-      val fs = d.listFiles()
-      if (fs == null) 0 else fs.count(_.getName.endsWith(".parquet"))
-    }
-    val before = parquetFiles(dir)
+    val before = parquetFiles(spark, dir)
     val df = spark.read.parquet(dir)
     val rows = df.count()
     val nFiles = math.max(1L, (rows + targetRowsPerFile - 1)
       / targetRowsPerFile).toInt
     AtomicParquet.publish(df.repartition(nFiles), dir)
-    (rows, before, parquetFiles(dir))
+    (rows, before, parquetFiles(spark, dir))
+  }
+
+  private def parquetFiles(spark: SparkSession, dir: String): Int = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) 0
+    else fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
   }
 
   /** Stamp `dir` with `_manifest.json` (row_count, content_sum,
@@ -70,24 +73,24 @@ object Compaction {
     val df = spark.read.parquet(dir)
     val rows = df.count()
     val fp = contentFingerprint(df)
-    val files = {
-      val fs = new java.io.File(dir).listFiles()
-      if (fs == null) 0 else fs.count(_.getName.endsWith(".parquet"))
-    }
     val json = s"""{"row_count":$rows,"content_sum":$fp,""" +
-      s""""n_files":$files}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "_manifest.json"),
-      json.getBytes("UTF-8"))
+      s""""n_files":${parquetFiles(spark, dir)}}"""
+    val p = new Path(dir, "_manifest.json")
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, true)
+    try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
   /** Read a manifest back (loud if absent — an unstamped handoff is
-    * the failure this exists to catch). */
+    * the failure this exists to catch), through the active session's
+    * Hadoop configuration. */
   def readManifest(dir: String): (Long, Long, Int) = {
-    val p = java.nio.file.Paths.get(dir, "_manifest.json")
-    require(java.nio.file.Files.exists(p),
-      s"no _manifest.json under $dir — unstamped publish")
-    val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val p = new Path(dir, "_manifest.json")
+    val fs = p.getFileSystem(
+      SparkSession.active.sparkContext.hadoopConfiguration)
+    require(fs.exists(p), s"no _manifest.json under $dir — unstamped publish")
+    val in = fs.open(p)
+    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
     def field(k: String): String =
       s.split(s""""$k":""")(1).takeWhile(c => c == '-' || c.isDigit)
     (field("row_count").toLong, field("content_sum").toLong,

@@ -41,83 +41,27 @@ object Scratch {
       catch { case e: Throwable => deleteTree(new java.io.File(d)); throw e }
     })
 
-  /** Copy every regular file from a staged dir into `dst` (created if
-    * missing) — the cheap per-invocation "tick delivery" that replaces
-    * re-running the staging Spark jobs when a query needs files to
-    * APPEAR in a watched directory between AvailableNow runs. Skips
-    * Spark's _SUCCESS markers and hidden files. */
+  /** Copy a staged dir's tree into `dst` (created if missing) — the
+    * cheap per-invocation "tick delivery" that replaces re-running the
+    * staging Spark jobs when a query needs files to APPEAR in a watched
+    * directory between AvailableNow runs, and the per-invocation copy
+    * of a staged artifact a query MUTATES (q338 folds stream batches
+    * into its copy of the prefix index, so invocations never share the
+    * staged original). Skips Spark's `_SUCCESS` markers and hidden
+    * files at every level. */
   def deliver(srcDir: String, dst: String): Unit = {
     val d = java.nio.file.Paths.get(dst)
     java.nio.file.Files.createDirectories(d)
-    val s = java.nio.file.Paths.get(srcDir)
-    val it = java.nio.file.Files.list(s).iterator()
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getFileName.toString
-      if (java.nio.file.Files.isRegularFile(f) && !name.startsWith("_") &&
-          !name.startsWith("."))
-        java.nio.file.Files.copy(f, d.resolve(name),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  /** [[deliver]], recursively — for staged artifacts that are
-    * DIRECTORY TREES (a written [[graft.ops.Dedup.PrefixIndex]]:
-    * vocab/grams/prefixes/meta parquet dirs). Used when a query
-    * MUTATES its per-invocation copy (q338 folds stream batches into
-    * the index), so invocations must never share the staged
-    * original. Same skip rules as [[deliver]] per level. */
-  def deliverTree(srcDir: String, dst: String): Unit = {
-    val d = java.nio.file.Paths.get(dst)
-    java.nio.file.Files.createDirectories(d)
-    val s = java.nio.file.Paths.get(srcDir)
-    val it = java.nio.file.Files.list(s).iterator()
+    val it = java.nio.file.Files.list(java.nio.file.Paths.get(srcDir)).iterator()
     while (it.hasNext) {
       val f = it.next()
       val name = f.getFileName.toString
       if (!name.startsWith("_") && !name.startsWith(".")) {
         if (java.nio.file.Files.isDirectory(f))
-          deliverTree(f.toString, d.resolve(name).toString)
+          deliver(f.toString, d.resolve(name).toString)
         else
           java.nio.file.Files.copy(f, d.resolve(name),
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-  }
-
-  /** [[deliverTree]] by HARDLINK instead of byte copy (falling back to
-    * a copy when the filesystem refuses to link, e.g. cross-device):
-    * carries a directory tree's files into a new location in O(files)
-    * metadata operations instead of O(bytes) I/O. Used by the
-    * append-structured index merge ([[graft.ops.Dedup
-    * .dedupAndMergePrefixIndexDir]]) to bring the UNCHANGED part-files
-    * of the previous index version into the publish transaction —
-    * the linked names are re-created at their old relative paths, so
-    * plans holding the old paths keep resolving after the swap, and
-    * deleting the swapped-out directory only drops link counts. Same
-    * `_`/hidden skip rules as [[deliverTree]]. Local-filesystem
-    * paths; a cluster deployment replaces the whole publish seam with
-    * a transactional table format (the [[graft.io.AtomicParquet]]
-    * scaladoc's standing caveat). */
-  def linkTree(srcDir: String, dst: String): Unit = {
-    val d = java.nio.file.Paths.get(dst)
-    java.nio.file.Files.createDirectories(d)
-    val s = java.nio.file.Paths.get(srcDir)
-    if (!java.nio.file.Files.isDirectory(s)) return
-    val it = java.nio.file.Files.list(s).iterator()
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getFileName.toString
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        if (java.nio.file.Files.isDirectory(f))
-          linkTree(f.toString, d.resolve(name).toString)
-        else
-          try java.nio.file.Files.createLink(d.resolve(name), f)
-          catch { case _: UnsupportedOperationException
-              | _: java.nio.file.FileSystemException =>
-            java.nio.file.Files.copy(f, d.resolve(name),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          }
       }
     }
   }

@@ -44,11 +44,6 @@ object Decontamination {
         i => Dedup.md5Hash60(concat_ws(" ", slice(words, i, lit(n)))))))
       .otherwise(array().cast("array<bigint>"))
 
-  /** Convenience form for one-shot contexts; hot paths should bind the
-    * words array first and call [[gramHashesFromWords]]. */
-  def gramHashes(text: Column, n: Int): Column =
-    gramHashesFromWords(split(trim(text), "\\s+"), n)
-
   /** (id, grams) with the split bound to a column before gram assembly. */
   private def docGrams(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =

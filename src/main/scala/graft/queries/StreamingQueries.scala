@@ -956,13 +956,12 @@ object StreamingQueries extends QueryModule {
     // REAL MICRO-BATCHES (r13 verdict "next" #2 — the q41 + q334
     // pattern combined): documents split by doc_id parity into two
     // cron ticks; each AvailableNow run's foreachBatch (a) builds the
-    // batch's span-gram state, (b) merges it into the ACCUMULATED
-    // state read from PARQUET (Dedup.readSpanGramState — tick 2's
-    // merge reads what tick 1 persisted), (c) writes the merged state
-    // back to the SAME directory (safe: AtomicParquet tmp-then-swap
-    // under the lazy read), and (d) scores the batch's duplicate
-    // coverage against the state RE-READ from disk — so the bar
-    // crosses the persistence boundary in BOTH directions every
+    // batch's span-gram state, (b) folds it into the ACCUMULATED state
+    // on disk (Dedup.appendSpanGramState — one TableLog commit of the
+    // batch's count deltas; tick 2 appends to what tick 1 persisted),
+    // and (c) scores the batch's duplicate coverage against the state
+    // RE-READ from disk (Dedup.readSpanGramState sums the deltas) — so
+    // the bar crosses the persistence boundary in BOTH directions every
     // micro-batch. The oracle replays from scratch: batch-0 coverage
     // against batch 0's own bar, batch-1 coverage against the
     // two-batch cumulative bar (counts are sums — 1 + 1 = 2 across
@@ -993,12 +992,10 @@ object StreamingQueries extends QueryModule {
               val batchState =
                 D.spanGramState(batch, "doc_id", "text", l = 12)
               // append-delta publish (r15): only the batch's
-              // (hash, count-delta) rows are written; the accumulated
-              // table's part-files are hardlinked into the same atomic
-              // swap (appendSpanGramState heals a crashed half-swap
-              // before its "state exists yet?" probe — the r14 review
-              // trap). The old read → merge → write-back cycle
-              // re-wrote the ENTIRE state every tick.
+              // (hash, count-delta) rows are written, and one TableLog
+              // commit adds them to the accumulated table's part-files,
+              // which stay where they are. The old read → merge →
+              // write-back cycle re-wrote the ENTIRE state every tick.
               D.appendSpanGramState(batchState, stateDir)
               // coverage against the state RE-READ from disk: the
               // persisted artifact, not the in-memory frame, is what
@@ -1039,12 +1036,12 @@ object StreamingQueries extends QueryModule {
     // full deployment loop for recall-exact incremental dedup: the
     // trained corpus (doc_id % 3 ≠ 0) is indexed + written to parquet
     // ONCE (staged); each invocation copies the index tree
-    // (Scratch.deliverTree — the stream MUTATES its copy) and streams
+    // (Scratch.deliver — the stream MUTATES its copy) and streams
     // the % 3 == 0 docs in two ticks (% 6 == 0, then % 6 == 3). Each
     // foreachBatch (a) dedups the batch against the index READ FROM
     // PARQUET — so tick 2's old side includes tick 1's batch — and
-    // (b) folds the batch in (mergePrefixIndex) and writes the index
-    // back as one atomic directory swap. Intra-batch pairs are
+    // (b) folds the batch in (mergePrefixIndex) and appends it to the
+    // index as one TableLog commit. Intra-batch pairs are
     // deliberately out of scope (that is the self-join operator,
     // q329). The oracle replays both ticks from scratch with the
     // SUFFIXED cross-blocking generator (crossPrefixPairCtesAt):
@@ -1073,7 +1070,7 @@ object StreamingQueries extends QueryModule {
         } + "/idx"
         val root = scratch()
         val idxDir = s"$root/idx"
-        graft.io.Scratch.deliverTree(idxSrc, idxDir)
+        graft.io.Scratch.deliver(idxSrc, idxDir)
         val inDir = s"$root/in"
         val ckpt = s"$root/ckpt"
         val outDir = s"$root/out"
@@ -1088,7 +1085,7 @@ object StreamingQueries extends QueryModule {
               // shared-frame, append-structured step (r14: the
               // separate calls built the batch grams, vocab extension,
               // and prefix rows twice per tick, then re-WROTE the
-              // whole corpus index per batch; the dir step links the
+              // whole corpus index per batch; the dir step keeps the
               // unchanged part-files and appends only the batch —
               // outputs identical, Round14PerfSpec)
               graft.ops.Dedup

@@ -58,9 +58,6 @@ object StreamingMerge {
 
 object StreamOps {
 
-  /** S-windows: tumbling event-time aggregation with a watermark — the
-    * streaming twin of q13's batch rollup. Late rows beyond the
-    * watermark are dropped; on-time aggregates finalize per window. */
   /** Exactly-once event dedup: duplicate deliveries of the same
     * `event_id` inside the watermark horizon collapse to one row with
     * BOUNDED state — `dropDuplicatesWithinWatermark` evicts seen-keys
@@ -70,6 +67,9 @@ object StreamOps {
     events.withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
+  /** S-windows: tumbling event-time aggregation with a watermark — the
+    * streaming twin of q13's batch rollup. Late rows beyond the
+    * watermark are dropped; on-time aggregates finalize per window. */
   def hourlyRollup(events: DataFrame, watermark: String = "2 hours"): DataFrame =
     events
       .withWatermark("ts", watermark)
@@ -223,26 +223,6 @@ object StreamOps {
       ts: java.sql.Timestamp, value: Double,
       asof_ts: Option[java.sql.Timestamp], asof_value: Option[Double])
 
-  /** Streaming twin of [[graft.ops.TemporalJoins.asOfJoin]] — the
-    * `mapGroupsWithState` form its scaladoc names: per key the state is
-    * the latest right-side (ts, value) seen so far, and every left row
-    * emits with the payload AS OF its own timestamp. Within a
-    * micro-batch the group's rows sort by (ts, side, value, id) — right
-    * before left at equal ts, max value winning a right-side tie — so a
-    * single-batch run (AvailableNow over one file, q93) is EXACTLY the
-    * batch operator / DuckDB ASOF JOIN. Across batches the usual
-    * streaming as-of caveat applies (Flink's temporal join has the
-    * same): a right row arriving after a left row already emitted is
-    * not retroactively applied — exactness requires per-key event-time
-    * order across batch boundaries.
-    *
-    * State is ONE small struct per key (bounded, like [[lifecycle]]);
-    * per-batch group sort materializes only that key's batch slice.
-    *
-    * @param tagged single input stream with columns
-    *        (side int — 0 right / 1 left, event_id long, user_id long,
-    *        ts timestamp, value double)
-    */
   /** TRUE stream-STREAM interval join — Spark's symmetric watermarked
     * join (both sides are unbounded streams; each buffers state and
     * probes the other as micro-batches arrive), vs [[asOfJoinStream]]
@@ -286,28 +266,9 @@ object StreamOps {
   def intervalJoinStreams(left: DataFrame, right: DataFrame,
       keyExpr: String, leftTsCol: String, rightTsCol: String,
       lowerSec: Long, upperSec: Long,
-      watermark: String = "1 hour"): DataFrame = {
-    require(lowerSec >= 0 && upperSec >= 0,
-      s"interval bounds must be >= 0, got $lowerSec/$upperSec")
-    require(lowerSec + upperSec >= 1, "window must span at least 1 s")
-    val binSec = lowerSec + upperSec
-    val l = left.withWatermark(leftTsCol, watermark)
-      .withColumn("__lbin",
-        expr(s"floor(unix_timestamp($leftTsCol) / $binSec)"))
-    val r = right.withWatermark(rightTsCol, watermark)
-      .withColumn("__rbin", explode(expr(
-        s"""sequence(
-           |  floor((unix_timestamp($rightTsCol) - $lowerSec) / $binSec),
-           |  floor((unix_timestamp($rightTsCol) + $upperSec) / $binSec))"""
-          .stripMargin)))
-    l.join(r, expr(
-      s"""$keyExpr
-         |AND __lbin = __rbin
-         |AND $leftTsCol >= $rightTsCol - INTERVAL $lowerSec SECONDS
-         |AND $leftTsCol <= $rightTsCol + INTERVAL $upperSec SECONDS"""
-        .stripMargin))
-      .drop("__lbin", "__rbin")
-  }
+      watermark: String = "1 hour"): DataFrame =
+    intervalJoin(left, right, keyExpr, leftTsCol, rightTsCol, lowerSec,
+      upperSec, watermark, "inner")
 
   /** LEFT OUTER stream-stream interval join — [[intervalJoinStreams]]
     * plus null-extended rows for left events that never met a match.
@@ -335,7 +296,14 @@ object StreamOps {
   def intervalJoinStreamsLeftOuter(left: DataFrame, right: DataFrame,
       keyExpr: String, leftTsCol: String, rightTsCol: String,
       lowerSec: Long, upperSec: Long,
-      watermark: String = "0 seconds"): DataFrame = {
+      watermark: String = "0 seconds"): DataFrame =
+    intervalJoin(left, right, keyExpr, leftTsCol, rightTsCol, lowerSec,
+      upperSec, watermark, "left_outer")
+
+  private def intervalJoin(left: DataFrame, right: DataFrame,
+      keyExpr: String, leftTsCol: String, rightTsCol: String,
+      lowerSec: Long, upperSec: Long, watermark: String,
+      joinType: String): DataFrame = {
     require(lowerSec >= 0 && upperSec >= 0,
       s"interval bounds must be >= 0, got $lowerSec/$upperSec")
     require(lowerSec + upperSec >= 1, "window must span at least 1 s")
@@ -354,10 +322,30 @@ object StreamOps {
          |AND __lbin = __rbin
          |AND $leftTsCol >= $rightTsCol - INTERVAL $lowerSec SECONDS
          |AND $leftTsCol <= $rightTsCol + INTERVAL $upperSec SECONDS"""
-        .stripMargin), "left_outer")
+        .stripMargin), joinType)
       .drop("__lbin", "__rbin")
   }
 
+  /** Streaming twin of [[graft.ops.TemporalJoins.asOfJoin]] — the
+    * `mapGroupsWithState` form its scaladoc names: per key the state is
+    * the latest right-side (ts, value) seen so far, and every left row
+    * emits with the payload AS OF its own timestamp. Within a
+    * micro-batch the group's rows sort by (ts, side, value, id) — right
+    * before left at equal ts, max value winning a right-side tie — so a
+    * single-batch run (AvailableNow over one file, q93) is EXACTLY the
+    * batch operator / DuckDB ASOF JOIN. Across batches the usual
+    * streaming as-of caveat applies (Flink's temporal join has the
+    * same): a right row arriving after a left row already emitted is
+    * not retroactively applied — exactness requires per-key event-time
+    * order across batch boundaries.
+    *
+    * State is ONE small struct per key (bounded, like [[lifecycle]]);
+    * per-batch group sort materializes only that key's batch slice.
+    *
+    * @param tagged single input stream with columns
+    *        (side int — 0 right / 1 left, event_id long, user_id long,
+    *        ts timestamp, value double)
+    */
   def asOfJoinStream(tagged: DataFrame): Dataset[AsOfOut] = {
     import tagged.sparkSession.implicits._
     tagged.as[(Int, Long, Long, java.sql.Timestamp, Double)]

@@ -34,4 +34,16 @@ class CompactionSpec extends SparkSpec {
       Compaction.readManifest(s"$root/nope")
     }
   }
+
+  test("compact and the manifest go through the path's Hadoop filesystem") {
+    val dir = GraftFs.path(spark, Scratch.dir("compact-graftfs-")) + "/t"
+    (0L until 100L).map(i => (i, s"row$i")).toDF("id", "v")
+      .repartition(20).write.parquet(dir)
+    val (rows, before, after) = Compaction.compact(spark, dir, 50L)
+    assert(rows == 100L && before == 20 && after == 2)
+    Compaction.writeManifest(spark, dir)
+    val (mr, ms, mf) = Compaction.readManifest(dir)
+    assert(mr == 100L && mf == 2)
+    assert(ms == Compaction.contentFingerprint(spark.read.parquet(dir)))
+  }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * cx-recompute assumptions of [[Dedup.mergePrefixIndex]] all cross
   * the persistence boundary — plus the read → merge → write-back-to-
   * the-same-directory cycle a streaming deployment runs per batch
-  * (safe only because the writes are AtomicParquet tmp-then-swap).
+  * (safe because a TableLog commit deletes the old files only after the
+  * new version is published).
   * Also pins the consolidated [[DriverGate]] probe and the
   * [[Dedup.SpanGramState]] anchor-length guard (r13 ADVICE).
   */
@@ -58,7 +59,7 @@ class Round14PropertySpec extends SparkSpec {
     assert(shape(reloaded.vocab) == shape(built.vocab))
     assert(shape(reloaded.grams) == shape(built.grams))
     assert(shape(reloaded.prefixes) == shape(built.prefixes))
-    // scalar parameters come back from the meta row
+    // scalar parameters come back from the log entry
     assert(reloaded.idCol == "doc_id" && reloaded.n == 3 &&
       reloaded.tau == 0.5)
     // vocab content identical — the frozen order IS these rows
@@ -80,22 +81,23 @@ class Round14PropertySpec extends SparkSpec {
       newSide, mergedReloaded, "text")) == fresh)
 
     // write the MERGED index back to the SAME directory (its frames
-    // lazily read that directory's parquet — safe only through the
-    // AtomicParquet tmp-then-swap), re-read, query again
+    // lazily read that directory's parquet — safe because the commit
+    // deletes the old files only after publishing), re-read, query again
     Dedup.writePrefixIndex(mergedReloaded, dir)
     val rereloaded = Dedup.readPrefixIndex(spark, dir)
     assert(pairs(Dedup.crossCorpusPrefixFilterPairsIndexed(
       newSide, rereloaded, "text")) == fresh)
 
-    // CRASHED HALF-SWAP recovery (r14 review): a publish that died
-    // between its two renames leaves the intact index at __old and no
-    // main dir — the reader must heal it, not see "no index"
-    val p = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.move(p, java.nio.file.Paths.get(dir + "__old"))
+    // CRASH BEFORE THE LOG ENTRY LANDS: a write that died after its
+    // table files were written leaves them beside the live ones — the
+    // reader must see the published index only, not the strays
+    val gramRows = rereloaded.grams.count()
+    built.grams.write.mode("append").parquet(s"$dir/grams")
+    built.prefixes.write.mode("append").parquet(s"$dir/prefixes")
     val healed = Dedup.readPrefixIndex(spark, dir)
     assert(pairs(Dedup.crossCorpusPrefixFilterPairsIndexed(
       newSide, healed, "text")) == fresh)
-    assert(java.nio.file.Files.exists(p)) // main dir restored
+    assert(healed.grams.count() == gramRows) // strays not read
   }
 
   test("SpanGramState survives a parquet round trip: l, counts, " +
@@ -134,12 +136,11 @@ class Round14PropertySpec extends SparkSpec {
       Dedup.spanGramState(docs, "doc_id", "text", l = 12).df)
     assert(rows(rAll.df) == fullBar)
 
-    // crashed half-swap: the healing probe answers true AND the
-    // subsequent read returns the intact state (a raw File.exists
-    // here would read "no state" and the next publish would delete
-    // the only copy — the q336 trap the r14 review closed)
-    val p = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.move(p, java.nio.file.Paths.get(dir + "__old"))
+    // crash before the log entry lands: a write that died after its
+    // state files were written leaves extra partial counts on disk —
+    // the probe still answers true AND the read returns the published
+    // bar (summing the strays in would inflate every count)
+    s1.df.write.mode("append").parquet(s"$dir/state")
     assert(graft.io.AtomicParquet.exists(spark, dir))
     assert(rows(Dedup.readSpanGramState(spark, dir).df) == fullBar)
     // ...and on a never-written dir the probe is simply false

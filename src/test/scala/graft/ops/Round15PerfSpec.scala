@@ -28,7 +28,7 @@ class Round15PerfSpec extends SparkSpec {
     val dirB = graft.io.Scratch.dir("graft-r15-span-b-") + "/state"
     // (relative name, size) of every data file under the state table —
     // the O(batch)-publish witness: each append must carry every prior
-    // delta file through UNCHANGED (hardlinked at its old name) and
+    // delta file through UNCHANGED (kept at its old name) and
     // only add the batch's files, where the rewrite path replaces the
     // whole file set every tick
     def stateFiles(dir: String): Map[String, Long] = {
