@@ -54,13 +54,12 @@ object Main {
       updateUnpublishedBySearch = !flags("--no-unpublish-by-search"))
 
     AtomicParquet.publish(merged, masterPath)
-    // CSV views read the published master — lineage to the swapped dir is
-    // already cut
-    val published = spark.read.parquet(masterPath)
+    // the views and the row count read the version just published
+    val published = AtomicParquet.read(spark, masterPath, Pipeline.emptyMaster(spark))
     Pipeline.writeCsv(published, s"$outDir/combined_data")
     Pipeline.writeCsv(Pipeline.dashboardView(published, asOf),
       s"$outDir/combined_data_filtered")
-    println(s"master rows: ${spark.read.parquet(masterPath).count()}")
+    println(s"master rows: ${published.count()}")
     new java.io.File(outDir).mkdirs()
     perf.awaitQuiesce()
     perf.writeLog(s"$outDir/performance_log.jsonl")

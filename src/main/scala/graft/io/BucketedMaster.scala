@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * shuffling just the day's scrape.
   *
   * Spark exploits bucketing only through the catalog (`saveAsTable` +
-  * `bucketBy`); the plain-directory master in AtomicParquet stays the
-  * simple default, this is the opt-in for big deployments.
+  * `bucketBy`); the [[AtomicParquet]] master (a [[TableLog]] root
+  * table) stays the simple default, this is the opt-in for big deployments.
   */
 object BucketedMaster {
 

@@ -12,14 +12,14 @@ import org.apache.spark.sql.functions._
   * target-sized files is what keeps read parallelism matched to data,
   * not to write history.
   *
-  * `compact` rewrites a parquet directory into
-  * `ceil(rows / targetRowsPerFile)` files through [[AtomicParquet
-  * .publish]] — readers never observe a half-rewritten table, and a
-  * crash mid-compaction leaves the original intact (the same
-  * tmp-swap contract the sinks use). Row-count targeting is
-  * deliberate (vs byte targeting): row counts are engine-exact and
-  * cheap (one aggregate), while on-disk bytes depend on encoder
-  * state; callers translate a byte budget via their known row width.
+  * `compact` rewrites a parquet directory (a plain `df.write.parquet`
+  * one is adopted as it is) into `ceil(rows / targetRowsPerFile)` files
+  * in one [[TableLog]] commit via [[AtomicParquet.publish]]: readers
+  * never observe a half-rewritten table, and a crash mid-compaction
+  * leaves the original intact. Row-count targeting is deliberate (vs
+  * byte targeting): row counts are engine-exact and cheap (one
+  * aggregate), while on-disk bytes depend on encoder state; callers
+  * translate a byte budget via their known row width.
   *
   * `writeManifest` stamps a publish with `_manifest.json`: row count
   * + an ORDER-FREE content fingerprint (sum of per-row md5-60 hashes
@@ -52,7 +52,7 @@ object Compaction {
     require(targetRowsPerFile >= 1,
       s"targetRowsPerFile must be >= 1, got $targetRowsPerFile")
     val before = parquetFiles(spark, dir)
-    val df = spark.read.parquet(dir)
+    val df = AtomicParquet.read(spark, dir, spark.read.parquet(dir))
     val rows = df.count()
     val nFiles = math.max(1L, (rows + targetRowsPerFile - 1)
       / targetRowsPerFile).toInt

@@ -13,36 +13,17 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, StructType}
   */
 object JsonTable {
 
-  def read(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.schema(schema).json(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  /** The published rows; `schema` reads a log-less directory or types an empty one. */
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    TableLog.readRoot(spark, path, spark.read.schema(schema).json(_), schema)
 
-  /** NaN-scrubbed overwrite (A9); atomic via the same tmp-swap as the
-    * parquet master. */
+  /** NaN-scrubbed overwrite (A9): one commit of the [[TableLog]] root table, as `json`. */
   def write(df: DataFrame, path: String): Unit = {
-    val scrubbed = df.schema.fields.foldLeft(df) { (acc, f) =>
-      f.dataType match {
-        case DoubleType | FloatType =>
-          acc.withColumn(f.name,
-            when(isnan(col(f.name)), lit(null)).otherwise(col(f.name)))
-        case _ => acc
-      }
-    }
-    val spark = df.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-    val main = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    scrubbed.write.mode("overwrite").json(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(main)) fs.rename(main, old)
-    fs.rename(tmp, main)
-    fs.delete(old, true)
+    val scrubbed = df.select(df.schema.map(f => f.dataType match {
+      case DoubleType | FloatType => when(!isnan(df(f.name)), df(f.name)).as(f.name)
+      case _ => df(f.name)
+    }): _*)
+    TableLog.commit(df.sparkSession, path, Map.empty[String, String],
+      TableLog.replace(TableLog.Root, scrubbed, "json"))
   }
 }

@@ -6598,7 +6598,7 @@ object CorpusQueries extends QueryModule {
     ),
 
     // ---- compaction + manifest: documents written as a 50-file mess,
-    // compacted to 200-row files through the atomic swap, stamped with
+    // compacted to 200-row files through one TableLog commit, stamped with
     // _manifest.json. The manifest's ORDER-FREE content fingerprint
     // (sum of per-row md5-60) survives fragment → compact → re-read,
     // and DuckDB recomputes it independently from the source table —

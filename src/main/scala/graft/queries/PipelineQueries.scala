@@ -242,7 +242,7 @@ object PipelineQueries extends QueryModule {
              |WHERE c_custkey % 3 = 0 AND c_custkey % 13 <> 0""".stripMargin),
     ),
 
-    // ---- A9 JSON sink (NaN scrub + atomic swap) → A1 JSON scan →
+    // ---- A9 JSON sink (NaN scrub + TableLog commit) → A1 JSON scan →
     // A10/A11 CSV sink (complex cols JSON-encoded) → CSV scan: the full
     // sink round-trip; output equals the scrubbed source values.
     Q(

@@ -15,7 +15,7 @@ import graft.streaming.{StreamingMerge, StreamOps}
   * The reference's hourly cron run IS one micro-batch (scrape_and_
   * process.sh:1-24 + parse_data.py:213-233): each q41 streaming run
   * consumes the files that appeared since the last checkpoint, merges
-  * them into the parquet master, and atomically swaps it — two runs here
+  * them into the parquet master, and commits it atomically — two runs here
   * reproduce two cron ticks, so the matched-row merge rules fire
   * cross-batch exactly as in q38's fold restatement.
   */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import graft.io.{AtomicParquet, TableLog}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
@@ -14,12 +14,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
 object StreamingMerge {
 
   /** Micro-batch upsert: each streaming batch MERGEs into the Parquet
-    * master with an atomic write-tmp-then-swap publish (S7 — the
-    * reference's whole-file-rewrite transaction, parse_data.py:222).
-    *
-    * Scale note: local mode swaps a directory; on a cluster the same
-    * hook writes to a transactional table format — the merge plan is
-    * unchanged.
+    * master in one [[TableLog]] commit (S7 — the reference's whole-file-
+    * rewrite transaction, parse_data.py:222) that records the batch id
+    * under `checkpointDir`, so a batch replayed after a crash is skipped.
     */
   def start(batches: DataFrame, masterPath: String,
       checkpointDir: String, seqCol: Option[String] = None): StreamingQuery = {
@@ -27,9 +24,9 @@ object StreamingMerge {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        mergeIntoMaster(spark, batch, masterPath, seqCol)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        mergeIntoMaster(batch.sparkSession, batch, masterPath, seqCol,
+          Some(checkpointDir -> batchId))
       }
       .start()
   }
@@ -40,19 +37,26 @@ object StreamingMerge {
     * @param seqCol optional source column giving the deterministic fold
     *        order for multiple same-key rows inside one micro-batch (the
     *        reference folds listings in scrape order, merge.py:96-99)
+    * @param txn the (writer, batch id) applied; a batch at or below the
+    *        writer's recorded id is skipped
     *
     * The merge's url fallback reads the micro-batch three times, so it
     * is materialized once: here when `seqCol` is given (the merge then
     * stays lazy), otherwise inside `mergeBatch` with its arrival ids.
     */
   def mergeIntoMaster(spark: SparkSession, batch: DataFrame,
-      masterPath: String, seqCol: Option[String] = None): Unit = {
-    val master = graft.io.AtomicParquet.read(spark, masterPath, batch)
-    val source = if (seqCol.isDefined) graft.ops.Materialize(batch) else batch
-    // publish writes to tmp first (executing the plan while the master
-    // path is still intact) and only then swaps — no checkpoint needed
-    val merged = graft.merge.MergeListings.mergeBatch(master, source, seqCol)
-    graft.io.AtomicParquet.publish(merged, masterPath)
+      masterPath: String, seqCol: Option[String] = None,
+      txn: Option[(String, Long)] = None): Unit = {
+    val replayed = txn.exists { case (writer, id) =>
+      TableLog.latest(spark, masterPath).exists(_.txns.get(writer).exists(_ >= id)) }
+    if (!replayed) {
+      val master = AtomicParquet.read(spark, masterPath, batch)
+      val source = if (seqCol.isDefined) graft.ops.Materialize(batch) else batch
+      // the commit deletes the master's files only after its entry lands
+      val merged = graft.merge.MergeListings.mergeBatch(master, source, seqCol)
+      TableLog.commit(spark, masterPath, Map.empty[String, String], txn,
+        Seq(TableLog.replace(TableLog.Root, merged)))
+    }
   }
 }
 
@@ -458,10 +462,9 @@ object StreamOps {
     * at ingest time. Each batch unions the published sample with the
     * new rows' hashes, drops redelivered keys (hash is a function of
     * the key, so a duplicate delivery can never displace a distinct
-    * row), and republishes the n lowest through
-    * [[graft.io.AtomicParquet]] (S7: a crash mid-publish leaves the
-    * previous sample readable). The n-sized sort-limit is a
-    * TakeOrdered — no global sort shuffle.
+    * row), and republishes the n lowest through [[AtomicParquet]] (S7:
+    * a crash mid-publish leaves the previous sample readable). The
+    * n-sized sort-limit is a TakeOrdered — no global sort shuffle.
     */
   def sampleExactStream(stream: DataFrame, keyCol: String, n: Long,
       seed: String, samplePath: String,
@@ -476,8 +479,8 @@ object StreamOps {
         val hashed = batch.withColumn("__r",
           graft.ops.Dedup.md5Hash60(concat(
             col(keyCol).cast("string"), lit(seed))))
-        val prev = graft.io.AtomicParquet.read(spark, samplePath, hashed)
-        graft.io.AtomicParquet.publish(
+        val prev = AtomicParquet.read(spark, samplePath, hashed)
+        AtomicParquet.publish(
           prev.unionByName(hashed)
             .dropDuplicates(keyCol)
             .orderBy(col("__r").asc, col(keyCol).asc).limit(n.toInt),

@@ -51,4 +51,16 @@ class WorkListSpec extends SparkSpec {
       .orderBy("offer_id").as[(String, Option[Double])].collect()
     assert(back.toSeq == Seq(("1", None), ("2", Some(5.0))))  // NaN → null
   }
+
+  test("JSON master: a dead writer's part-files are not read") {
+    val path = java.nio.file.Files.createTempDirectory("jsontbl").toString + "/master"
+    val schema = StructType(Seq(StructField("offer_id", StringType),
+      StructField("price_value", DoubleType)))
+    JsonTable.write(Seq(("1", 1.0), ("2", 2.0)).toDF("offer_id", "price_value"), path)
+    // a write that died before its commit: its files, no entry
+    Seq(("3", 3.0)).toDF("offer_id", "price_value").write.mode("append").json(path)
+    val back = JsonTable.read(spark, path, schema)
+      .orderBy("offer_id").as[(String, Double)].collect()
+    assert(back.toSeq == Seq(("1", 1.0), ("2", 2.0)))
+  }
 }

@@ -44,6 +44,32 @@ class StreamingSpec extends SparkSpec {
     assert(r.getAs[Long]("total_price_changes") == 1L)
   }
 
+  test("a micro-batch replayed under the same batch id is merged once") {
+    implicit val sq = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-replay").toString
+    val masterPath = s"$dir/master"
+    val ckpt = s"$dir/ckpt"
+    val stream = MemoryStream[(String, String, Double, Long)]
+    def run(): Unit = StreamingMerge.start(
+      stream.toDF().toDF("offer_id", "updated_date", "price_value", "seq"),
+      masterPath, ckpt, Some("seq")).awaitTermination(60000)
+    def changes: Long = spark.read.parquet(masterPath)
+      .select("total_price_changes").as[Long].collect().head
+    stream.addData(("1", "2026-01-01 10:00:00", 50000.0, 1L))
+    run()
+    stream.addData(("1", "2026-01-01 11:00:00", 40000.0, 2L),
+      ("1", "2026-01-01 12:00:00", 45000.0, 3L))
+    run()
+    assert(changes == 2L)
+    // the driver died after the master's commit, before the checkpoint's:
+    // on restart the query runs batch 1 again
+    val commit1 = new org.apache.hadoop.fs.Path(s"$ckpt/commits/1")
+    assert(commit1.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(commit1, false))
+    run()
+    assert(changes == 2L)
+  }
+
   test("watermarked hourly rollup finalizes windows") {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[(java.sql.Timestamp, String, Double)]
