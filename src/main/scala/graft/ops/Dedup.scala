@@ -298,13 +298,8 @@ object Dedup {
     val ranked = rankedGramVocab(tk)
     val par = df.sparkSession.sparkContext.defaultParallelism
     val pre = prefixFrame(tk, ranked, idCol, tau, par)
-    val cands = ppjoinCandidates(
-        pre.select(col(idCol).as("id_a"), col("__len").as("__la"),
-          col("__i").as("__ia"), col("__th")),
-        pre.select(col(idCol).as("id_b"), col("__len").as("__lb"),
-          col("__i").as("__ib"), col("__th")),
-        tau, selfJoin = true)
-    verifyJaccard(cands, grams, grams, idCol, tau, par)
+    verifyJaccard(ppjoinCandidates(pre, pre, idCol, tau, selfJoin = true),
+        grams, grams, idCol, tau, par)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
@@ -343,17 +338,10 @@ object Dedup {
     // lazy, the union-df aggregation (corpus-sized input) runs twice
     val ranked = rankedGramVocab(tkNew.unionByName(tkOld)).materialized
     val par = dfNew.sparkSession.sparkContext.defaultParallelism
-    val preNew = prefixFrame(tkNew, ranked, idCol, tau, par)
-    val preOld = prefixFrame(tkOld, ranked, idCol, tau, par)
-    val cands = ppjoinCandidates(
-        preNew.select(col(idCol).as("id_a"), col("__len").as("__la"),
-          col("__i").as("__ia"), col("__th")),
-        preOld.select(col(idCol).as("id_b"), col("__len").as("__lb"),
-          col("__i").as("__ib"), col("__th")),
-        tau, selfJoin = false)
-    verifyJaccard(cands, gramsNew, gramsOld, idCol, tau, par)
-      .select(col("id_a").as("id_new"), col("id_b").as("id_old"),
-        col("jaccard"))
+    def side(grams: DataFrame, tk: DataFrame) = PrefixIndex(ranked, grams,
+      prefixFrame(tk, ranked, idCol, tau, par), idCol, n, tau)
+    crossPairs(side(gramsNew, tkNew), side(gramsOld, tkOld),
+      derivedWidth = false)
   }
 
   /** PERSISTED prefix-filter index over a trained corpus (r12 verdict
@@ -416,13 +404,9 @@ object Dedup {
     * never an old-corpus rescan. */
   def mergePrefixIndex(index: PrefixIndex, dfBatch: DataFrame,
       textCol: String): PrefixIndex = {
-    val gramsB = prefixGramFrame(dfBatch, index.idCol, textCol, index.n)
-    val tkB = prefixTokenStream(gramsB, index.idCol)
-    val vocab = frozenAugmentedVocab(index.vocab, tkB).materialized
-    val par = dfBatch.sparkSession.sparkContext.defaultParallelism
-    val preB = prefixFrame(tkB, vocab, index.idCol, index.tau, par)
-    PrefixIndex(vocab, index.grams.unionByName(gramsB),
-      index.prefixes.unionByName(preB), index.idCol, index.n, index.tau)
+    val b = batchIndex(index, dfBatch, textCol, keepVocab = true)
+    b.copy(grams = index.grams.unionByName(b.grams),
+      prefixes = index.prefixes.unionByName(b.prefixes))
   }
 
   /** The RECALL-EXACT cross-corpus near-dup pairs of
@@ -434,110 +418,102 @@ object Dedup {
     * document frequencies and re-sorted the old corpus every call.
     * Output is IDENTICAL to the fresh path (both are recall-exact and
     * the verify is the same exact Jaccard) — differentially pinned in
-    * Round13PropertySpec. */
+    * DedupPersistenceSpec. */
   def crossCorpusPrefixFilterPairsIndexed(dfNew: DataFrame,
-      index: PrefixIndex, textCol: String): DataFrame = {
-    val gramsNew = prefixGramFrame(dfNew, index.idCol, textCol, index.n)
-    val tkNew = prefixTokenStream(gramsNew, index.idCol)
-    val ranked = frozenAugmentedVocab(index.vocab, tkNew)
-    val par = dfNew.sparkSession.sparkContext.defaultParallelism
-    val preNew = prefixFrame(tkNew, ranked, index.idCol, index.tau, par)
-    val idCol = index.idCol
-    val cands = ppjoinCandidates(
-        preNew.select(col(idCol).as("id_a"), col("__len").as("__la"),
-          col("__i").as("__ia"), col("__th")),
-        index.prefixes.select(col(idCol).as("id_b"),
-          col("__len").as("__lb"), col("__i").as("__ib"), col("__th")),
-        index.tau, selfJoin = false)
+      index: PrefixIndex, textCol: String): DataFrame =
     // pinned width here (r14 A/B): this entry point serves CORPUS-
     // sized batches too (q335 queries a whole slice — derived width
     // regressed it 2.9 -> 4.9 s, the q329 lesson), so only the
-    // per-micro-batch fused steps below derive the spread
-    verifyJaccard(cands, gramsNew, index.grams, idCol, index.tau, par)
-      .select(col("id_a").as("id_new"), col("id_b").as("id_old"),
-        col("jaccard"))
-  }
+    // per-micro-batch Dir step derives the spread
+    crossPairs(batchIndex(index, dfNew, textCol, keepVocab = false), index,
+      derivedWidth = false)
 
-  /** One-pass per-batch step for the streaming deployment loop (r14
-    * optimization): dedup the batch against the index AND fold it in,
-    * SHARING the batch gram frame, the frozen-order vocab extension,
-    * and the batch prefix build. Calling
-    * [[crossCorpusPrefixFilterPairsIndexed]] then [[mergePrefixIndex]]
-    * separately computes all three twice per batch — q338 measured
-    * 11.2 s at sf0.1 with the duplicate work, and a real per-batch
-    * deployment always wants both outputs. Pair set and merged index
-    * are IDENTICAL to the two separate calls (the shared frames are
-    * value-equal by construction: same batch, same frozen vocab
-    * extension — differentially pinned in Round14PerfSpec).
-    *
-    * @return (pairs (id_new, id_old, jaccard), merged index) */
-  def dedupAndMergePrefixIndex(dfNew: DataFrame, index: PrefixIndex,
-      textCol: String): (DataFrame, PrefixIndex) = {
-    val idCol = index.idCol
-    val gramsNew = prefixGramFrame(dfNew, idCol, textCol, index.n)
-    val tkNew = prefixTokenStream(gramsNew, idCol)
-    // materialized: read by the batch prefix build here AND carried
-    // into the merged index (mergePrefixIndex materializes it too)
-    val vocab = frozenAugmentedVocab(index.vocab, tkNew).materialized
-    val par = dfNew.sparkSession.sparkContext.defaultParallelism
-    val preNew = prefixFrame(tkNew, vocab, idCol, index.tau, par)
-    val cands = ppjoinCandidates(
-        preNew.select(col(idCol).as("id_a"), col("__len").as("__la"),
-          col("__i").as("__ia"), col("__th")),
-        index.prefixes.select(col(idCol).as("id_b"),
-          col("__len").as("__lb"), col("__i").as("__ib"), col("__th")),
-        index.tau, selfJoin = false)
-    val pairs = verifyJaccard(cands, gramsNew, index.grams, idCol,
-        index.tau, par, derivedWidth = true)
-      .select(col("id_a").as("id_new"), col("id_b").as("id_old"),
-        col("jaccard"))
-    val merged = PrefixIndex(vocab, index.grams.unionByName(gramsNew),
-      index.prefixes.unionByName(preNew), idCol, index.n, index.tau)
-    (pairs, merged)
-  }
-
-  /** [[dedupAndMergePrefixIndex]] against a PERSISTED index directory,
-    * with an APPEND-STRUCTURED publish: one [[graft.io.TableLog]] commit
-    * appends only the batch's gram and prefix rows to `grams` and
-    * `prefixes` and replaces `vocab` (vocab-sized — the frozen-order
-    * extension re-ranks only its df-0 collision groups, see
-    * [[frozenAugmentedVocab]]). The previous version's part-files stay
-    * where they are, so per-batch publish I/O is O(batch), never a
-    * rewrite of the corpus-sized tables. Readers see the old or the new
-    * index; a crash leaves the old one readable.
+  /** One per-batch step for the streaming deployment loop against a
+    * PERSISTED index directory: dedup the batch against the index and
+    * fold it in, sharing one batch side (gram frame, frozen-order vocab
+    * extension, prefix build). The publish is APPEND-STRUCTURED: one
+    * [[graft.io.TableLog]] commit appends only the batch's gram and
+    * prefix rows to `grams` and `prefixes` and replaces `vocab`
+    * (vocab-sized — the frozen-order extension re-ranks only its df-0
+    * collision groups, see [[frozenAugmentedVocab]]). The previous
+    * version's part-files stay where they are, so per-batch publish
+    * I/O is O(batch), never a rewrite of the corpus-sized tables —
+    * until a table's latest entry lists more than `CompactAt` (64) files:
+    * then that table is replaced by its rows plus the batch's, written
+    * `defaultParallelism` wide (the [[appendSpanGramState]] cadence).
+    * Readers see the old or the new index; a crash leaves the old one
+    * readable.
     *
     * Returned pairs are MATERIALIZED before the commit (they read the
     * pre-merge index). Directory contents after the call are
     * row-identical to `writePrefixIndex(mergePrefixIndex(read, batch))`
-    * — only the part-file layout differs (Round14PerfSpec pins both
-    * the row sets and next-batch dedup equality).
+    * — only the part-file layout differs (DedupPersistenceSpec pins
+    * both the row sets and next-batch dedup equality).
     *
     * @return the batch-vs-index pairs (id_new, id_old, jaccard) */
   def dedupAndMergePrefixIndexDir(spark: org.apache.spark.sql.SparkSession,
       dir: String, dfBatch: DataFrame, textCol: String): DataFrame = {
-    val index = readPrefixIndex(spark, dir)
-    val idCol = index.idCol
-    val gramsNew = prefixGramFrame(dfBatch, idCol, textCol, index.n)
-    val tkNew = prefixTokenStream(gramsNew, idCol)
-    val vocab = frozenAugmentedVocab(index.vocab, tkNew).materialized
-    val par = dfBatch.sparkSession.sparkContext.defaultParallelism
-    val preNew = prefixFrame(tkNew, vocab, idCol, index.tau, par)
-    val cands = ppjoinCandidates(
-        preNew.select(col(idCol).as("id_a"), col("__len").as("__la"),
-          col("__i").as("__ia"), col("__th")),
-        index.prefixes.select(col(idCol).as("id_b"),
-          col("__len").as("__lb"), col("__i").as("__ib"), col("__th")),
-        index.tau, selfJoin = false)
-    val pairs = Materialize(
-      verifyJaccard(cands, gramsNew, index.grams, idCol, index.tau, par,
-          derivedWidth = true)
-        .select(col("id_a").as("id_new"), col("id_b").as("id_old"),
-          col("jaccard")))
+    val e = logEntry(spark, dir)
+    val index = prefixIndexOf(spark, dir, e)
+    val b = batchIndex(index, dfBatch, textCol, keepVocab = true)
+    // derived width: this step's candidate sets are batch-sized (r14
+    // A/B at verifyJaccard)
+    val pairs = Materialize(crossPairs(b, index, derivedWidth = true))
+    val par = spark.sparkContext.defaultParallelism
     TableLog.commit(spark, dir, indexParams(index),
-      TableLog.replace("vocab", vocab), TableLog.append("grams", gramsNew),
-      TableLog.append("prefixes", preNew))
+      TableLog.replace("vocab", b.vocab),
+      appendOrCompact(Some(e), "grams", b.grams)(
+        index.grams.unionByName(b.grams).repartition(par)),
+      appendOrCompact(Some(e), "prefixes", b.prefixes)(
+        index.prefixes.unionByName(b.prefixes).repartition(par)))
     pairs
   }
+
+  /** The batch side of every batch-against-index step, as an index of
+    * the batch alone: its gram and prefix rows under `index`'s frozen
+    * order extended with the batch's novel grams (that extension is its
+    * `vocab`). `keepVocab` materializes the extension for the callers
+    * that carry it into a merged index, where it is read twice; the
+    * pairs-only caller reads it once, inside the prefix build. */
+  private def batchIndex(index: PrefixIndex, dfBatch: DataFrame,
+      textCol: String, keepVocab: Boolean): PrefixIndex = {
+    val grams = prefixGramFrame(dfBatch, index.idCol, textCol, index.n)
+    val tk = prefixTokenStream(grams, index.idCol)
+    val ext = frozenAugmentedVocab(index.vocab, tk)
+    val vocab = if (keepVocab) ext.materialized else ext
+    val par = dfBatch.sparkSession.sparkContext.defaultParallelism
+    index.copy(vocab = vocab, grams = grams,
+      prefixes = prefixFrame(tk, vocab, index.idCol, index.tau, par))
+  }
+
+  /** (id_new, id_old, jaccard) for every pair of a `fresh` doc and an
+    * `old` doc at exact Jaccard ≥ tau; both sides' prefix rows must be
+    * under one gram order. `derivedWidth` as on [[verifyJaccard]]. */
+  private def crossPairs(fresh: PrefixIndex, old: PrefixIndex,
+      derivedWidth: Boolean): DataFrame = {
+    val par = old.grams.sparkSession.sparkContext.defaultParallelism
+    verifyJaccard(ppjoinCandidates(fresh.prefixes, old.prefixes, old.idCol,
+        old.tau, selfJoin = false),
+      fresh.grams, old.grams, old.idCol, old.tau, par, derivedWidth)
+      .select(col("id_a").as("id_new"), col("id_b").as("id_old"),
+        col("jaccard"))
+  }
+
+  /** Past this many files listed for a table in its artifact's latest
+    * entry, a per-batch append becomes a compacting replace. */
+  private val CompactAt = 64
+
+  /** `batch` appended to `table`, or `whole` (the table's rows plus the
+    * batch's) replacing it once `prev` lists more than `compactAt` files
+    * for it. One O(table) write every Ω(compactAt) appends amortizes to
+    * O(table / compactAt) per append and bounds the file count at
+    * compactAt + files-per-batch. */
+  private def appendOrCompact(prev: Option[TableLog.Entry], table: String,
+      batch: DataFrame, compactAt: Int = CompactAt)(
+      whole: => DataFrame): TableLog.Change =
+    if (prev.exists(_.tables.get(table).exists(_.files.size > compactAt)))
+      TableLog.replace(table, whole)
+    else TableLog.append(table, batch)
 
   private def indexParams(index: PrefixIndex): Map[String, String] =
     Map("id_col" -> index.idCol, "n" -> index.n.toString,
@@ -558,7 +534,7 @@ object Dedup {
     * buckets `prefixes` and `vocab` by `__th` so the per-batch merge
     * join is co-partitioned. Round-trip identity (schema and output,
     * including a merge ON the reloaded index and a crash before the
-    * log entry lands) is pinned in Round14PropertySpec and
+    * log entry lands) is pinned in DedupPersistenceSpec and
     * driver-checked by q335. */
   def writePrefixIndex(index: PrefixIndex, dir: String): Unit =
     TableLog.commit(index.vocab.sparkSession, dir, indexParams(index),
@@ -574,14 +550,16 @@ object Dedup {
     * (the same mistake-class guard [[SpanGramState]] gets from carrying
     * `l`). */
   def readPrefixIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): PrefixIndex = {
-    val e = logEntry(spark, dir)
+      dir: String): PrefixIndex =
+    prefixIndexOf(spark, dir, logEntry(spark, dir))
+
+  private def prefixIndexOf(spark: org.apache.spark.sql.SparkSession,
+      dir: String, e: TableLog.Entry): PrefixIndex =
     PrefixIndex(
       TableLog.read(spark, dir, e, "vocab"),
       TableLog.read(spark, dir, e, "grams"),
       TableLog.read(spark, dir, e, "prefixes"),
       e.params("id_col"), e.params("n").toInt, e.params("tau").toDouble)
-  }
 
   private def logEntry(spark: org.apache.spark.sql.SparkSession,
       dir: String): TableLog.Entry =
@@ -597,7 +575,7 @@ object Dedup {
     * r14, where the vocab-wide `row_number` window was a vocab-sized
     * shuffle + sort PER MERGE — the dominant per-tick vocab cost at
     * corpus scale). Output is bit-identical to the vocab-wide
-    * recompute (Round15PerfSpec): for df > 0 rows the stored rank IS
+    * recompute (DedupPersistenceSpec): for df > 0 rows the stored rank IS
     * the recomputed rank (same group membership since first ranked,
     * inductively across merges), and for df-0 rows partitioning by
     * (__dfc = 0, __th) equals partitioning by __th on the slice.
@@ -697,9 +675,11 @@ object Dedup {
   /** Prefix-hash equality join + the ppjoin length and positional
     * filters (see [[prefixFilterJaccardPairs]]' scaladoc for the
     * losslessness argument; ANY-ROW-PASSES semantics throughout). */
-  private def ppjoinCandidates(a: DataFrame, b: DataFrame, tau: Double,
-      selfJoin: Boolean): DataFrame = {
-    val joined0 = a.join(b, "__th")
+  private def ppjoinCandidates(preA: DataFrame, preB: DataFrame,
+      idCol: String, tau: Double, selfJoin: Boolean): DataFrame = {
+    def side(pre: DataFrame, s: String) = pre.select(col(idCol).as(s"id_$s"),
+      col("__len").as(s"__l$s"), col("__i").as(s"__i$s"), col("__th"))
+    val joined0 = side(preA, "a").join(side(preB, "b"), "__th")
     val joined = if (selfJoin) joined0.filter(col("id_a") < col("id_b"))
       else joined0
     joined
@@ -1815,7 +1795,7 @@ object Dedup {
     // cost today, unbounded storage saved at scale. See SCALING.md
     // (r11).
     // the full-corpus read IS the incremental read against your own
-    // state (self-state identity, Round13PropertySpec)
+    // state (self-state identity, DedupPersistenceSpec)
     duplicateSpansAgainst(df, spanGramState(df, idCol, textCol, l),
       idCol, textCol, minFreq)
   }
@@ -1933,15 +1913,13 @@ object Dedup {
     * Directory contents after the call are VALUE-identical to
     * `writeSpanGramState(mergeSpanGramState(read, batch))` — the
     * delta layout differs, the aggregated read does not
-    * (Round15PerfSpec pins the read-side bar and the coverage output
-    * against the rewrite path). Delta growth is BOUNDED: once the
-    * latest log entry lists more than `compactAt` state files the
-    * append becomes a compacting replace (the summed bar, via
-    * [[writeSpanGramState]] — one O(corpus) write every Ω(compactAt)
-    * ticks amortizes to O(corpus / compactAt) per tick), so the
-    * small-file count never exceeds compactAt + files-per-batch. */
+    * (DedupPersistenceSpec pins the read-side bar and the coverage
+    * output against the rewrite path). Delta growth is BOUNDED: once
+    * the latest log entry lists more than `compactAt` state files the
+    * append becomes a compacting replace by the summed bar (the
+    * [[dedupAndMergePrefixIndexDir]] cadence; see [[appendOrCompact]]). */
   def appendSpanGramState(batch: SpanGramState, dir: String,
-      compactAt: Int = 64): Unit = {
+      compactAt: Int = CompactAt): Unit = {
     require(compactAt >= 1, s"compactAt must be >= 1, got $compactAt")
     val spark = batch.df.sparkSession
     val prev = TableLog.latest(spark, dir)
@@ -1952,12 +1930,9 @@ object Dedup {
           s"${batch.l} onto a state built at $prevL — their hashes " +
           "never match")
     }
-    if (prev.exists(_.tables("state").files.size > compactAt))
-      writeSpanGramState(
-        mergeSpanGramState(spanGramStateOf(spark, dir, prev.get), batch), dir)
-    else
-      TableLog.commit(spark, dir, Map("l" -> batch.l.toString),
-        TableLog.append("state", batch.df))
+    TableLog.commit(spark, dir, Map("l" -> batch.l.toString),
+      appendOrCompact(prev, "state", batch.df, compactAt)(
+        mergeSpanGramState(spanGramStateOf(spark, dir, prev.get), batch).df))
   }
 
   /** Reload the latest version of a [[writeSpanGramState]] /
@@ -1989,7 +1964,7 @@ object Dedup {
     * When the state covers batches 0..k (including `df` itself), the
     * output equals the full-corpus [[duplicateSpans]] over those
     * batches restricted to `df`'s documents — replay-from-scratch
-    * differential in Round13PropertySpec. */
+    * differential in DedupPersistenceSpec. */
   def duplicateSpansAgainst(df: DataFrame, state: SpanGramState,
       idCol: String, textCol: String,
       minFreq: Long = 2L): DataFrame = {
@@ -2067,7 +2042,7 @@ object Dedup {
   def duplicateCoverage(df: DataFrame, idCol: String, textCol: String,
       l: Int, minFreq: Long = 2L): DataFrame =
     // the full-corpus read IS the incremental read against your own
-    // state (Round13PropertySpec pins the identity) — one
+    // state (DedupPersistenceSpec pins the identity) — one
     // implementation, so the coverage arithmetic can never diverge
     // between the batch and full-corpus operators
     duplicateCoverageAgainst(df, spanGramState(df, idCol, textCol, l),

@@ -391,7 +391,7 @@ object Similarity {
     * top-k; per-side candidate order, NaN-first sort, (cosine desc,
     * neighbor asc) tie-break, and the merge window are IDENTICAL to the
     * single-sided kernels, so the per-side output is bit-equal
-    * (differentially pinned in Round14PerfSpec).
+    * (differentially pinned in CorpusOpsSpec).
     *
     * @return (id, neighbor_id, cosine, rank 1..k within side,
     *         same_label) */
@@ -872,7 +872,7 @@ object Similarity {
     * scaladoc used to claim the opposite; the oracle-checked behavior
     * was always exclusion). Searching for duplicates of indexed
     * vectors therefore needs query ids disjoint from member ids —
-    * the Round14PropertySpec twin probe pattern. */
+    * the CorpusOpsSpec twin probe pattern. */
   def annSearchIvf(queries: DataFrame, index: IvfIndex, idCol: String,
       vecCol: String, k: Int, nProbe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
@@ -904,7 +904,7 @@ object Similarity {
     * Cells emptied by the delete are dropped (a probe of an empty cell
     * contributes nothing either way). Exact-by-construction: search
     * results can only lose the deleted neighbors — candidate ranking
-    * of the survivors is byte-identical (Round14PropertySpec pins
+    * of the survivors is byte-identical (CorpusOpsSpec pins
     * delete/append order-insensitivity and the never-retrieved
     * property). */
   def deleteFromIvfIndex(index: IvfIndex, deleteIds: DataFrame,

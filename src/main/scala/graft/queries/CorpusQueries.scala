@@ -1972,7 +1972,7 @@ object CorpusQueries extends QueryModule {
     // identical to q331's fresh-union path (both recall-exact, same
     // exact verify; the frozen order only changes WHICH candidates get
     // verified), so the oracle is q331's restatement verbatim and
-    // Round13PropertySpec pins the differential under both fold
+    // DedupPersistenceSpec pins the differential under both fold
     // orders. Since r14 the built+merged index MEMOIZES per (session,
     // sf) — see prefixIndexMemo: the first (warm) invocation pays the
     // one-time build+merge, and the timed rep measures the per-batch
@@ -2121,7 +2121,7 @@ object CorpusQueries extends QueryModule {
     // old-corpus rescan. The frozen-order and cx-recompute invariants
     // must survive the round trip for this to hash-match, so the
     // oracle is q331's restatement verbatim (the same argument as
-    // q332; Round14PropertySpec pins the boundary crossing
+    // q332; DedupPersistenceSpec pins the boundary crossing
     // property-level, including a write-back cycle).
     Q(
       "q335_prefix_index_parquet",
@@ -4936,7 +4936,7 @@ object CorpusQueries extends QueryModule {
         // the separate pos/neg kernels — r14 halved it); materialized
         // so the pos/neg branches of the self-join don't re-run the
         // kernel subtree. Per-side output is bit-equal to the
-        // single-sided kernels (Round14PerfSpec differential).
+        // single-sided kernels (CorpusOpsSpec differential).
         val both = graft.ops.Materialize(
           Similarity.labelNeighborsBothKernel(emb, "vec_id",
             "embedding", "label", k = 1))

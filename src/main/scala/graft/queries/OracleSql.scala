@@ -56,7 +56,7 @@ object OracleSql {
     * whole 10× sweep (503 of 586 s); a deterministic slice keeps the
     * parameter point exercised at a bounded cost. Empty (the default)
     * emits byte-identical text to the pre-r14 generator — the
-    * Round13PropertySpec byte pin on the house instantiation holds. */
+    * OracleSqlSpec byte pin on the house instantiation holds. */
   def blockedPairCtesAt(tau: String, n: Int, where: String = ""): String = {
     require(n >= 2, s"word n-grams need n >= 2, got $n")
     val gram = (0 until n)

@@ -1040,10 +1040,10 @@ object StreamingQueries extends QueryModule {
     // the % 3 == 0 docs in two ticks (% 6 == 0, then % 6 == 3). Each
     // foreachBatch (a) dedups the batch against the index READ FROM
     // PARQUET — so tick 2's old side includes tick 1's batch — and
-    // (b) folds the batch in (mergePrefixIndex) and appends it to the
-    // index as one TableLog commit. Intra-batch pairs are
-    // deliberately out of scope (that is the self-join operator,
-    // q329). The oracle replays both ticks from scratch with the
+    // (b) folds the batch in and appends it to the index as one
+    // TableLog commit (Dedup.dedupAndMergePrefixIndexDir). Intra-batch
+    // pairs are deliberately out of scope (that is the self-join
+    // operator, q329). The oracle replays both ticks from scratch with the
     // SUFFIXED cross-blocking generator (crossPrefixPairCtesAt):
     // tick 1 blocks batch A vs the initial corpus, tick 2 blocks
     // batch B vs initial ∪ A — recall-exact on both sides, so the
@@ -1082,12 +1082,10 @@ object StreamingQueries extends QueryModule {
             .foreachBatch { (batch: DataFrame, _: Long) =>
               // dedup against the pre-merge index (the batch never
               // pairs with itself here) and fold the batch in, as ONE
-              // shared-frame, append-structured step (r14: the
-              // separate calls built the batch grams, vocab extension,
-              // and prefix rows twice per tick, then re-WROTE the
-              // whole corpus index per batch; the dir step keeps the
-              // unchanged part-files and appends only the batch —
-              // outputs identical, Round14PerfSpec)
+              // shared-frame, append-structured step: the dir step
+              // keeps the unchanged part-files and appends only the
+              // batch (outputs equal to a full rewrite,
+              // DedupPersistenceSpec)
               graft.ops.Dedup
                 .dedupAndMergePrefixIndexDir(s, idxDir, batch, "text")
                 .write.mode("append").parquet(outDir)

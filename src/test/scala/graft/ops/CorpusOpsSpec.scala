@@ -1098,4 +1098,111 @@ class CorpusOpsSpec extends SparkSpec {
       full.get(did).foreach(sc => assert(sc == s2))
     }
   }
+
+  test("labelNeighborsBothKernel side-filtered equals the single-sided " +
+      "kernels bit-for-bit (cosines, ids, ranks), k=1 and k=3") {
+    val emb = graft.model.Tables.embeddings(spark, sf)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    for (k <- Seq(1, 3)) {
+      val both = Similarity.labelNeighborsBothKernel(emb, "vec_id",
+        "embedding", "label", k = k)
+      val pos = Similarity.nearestPositivesKernel(emb, "vec_id",
+        "embedding", "label", k = k)
+      val neg = Similarity.hardNegativesKernel(emb, "vec_id",
+        "embedding", "label", k = k)
+      val cols = Seq("id", "neighbor_id", "cosine", "rank").map(col)
+      assert(rows(both.filter(col("same_label")).select(cols: _*)) ==
+        rows(pos.select(cols: _*)), s"positives diverged at k=$k")
+      assert(rows(both.filter(!col("same_label")).select(cols: _*)) ==
+        rows(neg.select(cols: _*)), s"negatives diverged at k=$k")
+    }
+  }
+
+  test("IVF maintenance: delete/append fold order irrelevant for " +
+      "disjoint sets, deleted members never retrieved, appended twins " +
+      "found, empty ops are identity, both delete paths agree") {
+    val emb = graft.model.Tables.embeddings(spark, sf)
+    val bulk = emb.filter(col("vec_id") % 5 =!= 4)
+    val appendBatch = emb.filter(col("vec_id") % 5 === 4)
+    val delIds = bulk.filter(col("vec_id") % 7 === 3).select(col("vec_id"))
+    val queries = emb.filter(col("vec_id") % 11 === 0)
+    def results(idx: Similarity.IvfIndex): Set[(Long, Long, Double)] =
+      Similarity.annSearchIvf(queries, idx, "vec_id", "embedding",
+          k = 3, nProbe = 4)
+        .select(col("id"), col("neighbor_id"), col("cosine"))
+        .collect().map(r => (r.getLong(0), r.getLong(1),
+          BigDecimal(r.getDouble(2)).setScale(9,
+            BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
+
+    val base = Similarity.buildIvfIndex(bulk, "vec_id", "embedding",
+      numCentroids = 8)
+    // fold order: (delete then append) == (append then delete) —
+    // assignment is a pure function of the FROZEN centers, so
+    // disjoint maintenance ops commute
+    val da = results(Similarity.appendToIvfIndex(
+      Similarity.deleteFromIvfIndex(base, delIds, "vec_id"),
+      appendBatch, "vec_id", "embedding"))
+    val ad = results(Similarity.deleteFromIvfIndex(
+      Similarity.appendToIvfIndex(base, appendBatch, "vec_id",
+        "embedding"),
+      delIds, "vec_id"))
+    assert(da == ad)
+    assert(da.nonEmpty)
+    // deleted members are never retrieved
+    val deleted = delIds.collect().map(_.getLong(0)).toSet
+    assert(da.forall { case (_, nb, _) => !deleted(nb) })
+    // appended twins are found: a RE-ID'd duplicate of each appended
+    // vector (the kernel excludes equal ids — annSearchIvf's r14 doc
+    // fix) probed at nProbe = 1 retrieves the appended member at
+    // cosine ~1: same vector + same frozen centers ⇒ the twin's
+    // rank-0 probe cell IS the member's stored cell
+    val appendedIds = appendBatch.select(col("vec_id")).collect()
+      .map(_.getLong(0)).toSet
+    val twinProbes = appendBatch.select(
+      (col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+    val twinHits = Similarity.annSearchIvf(twinProbes,
+        Similarity.appendToIvfIndex(base, appendBatch, "vec_id",
+          "embedding"),
+        "vec_id", "embedding", k = 1, nProbe = 1)
+      .select(col("id"), col("neighbor_id"), col("cosine")).collect()
+    assert(twinHits.nonEmpty && twinHits.forall(r =>
+      r.getLong(1) == r.getLong(0) - 1000000L && r.getDouble(2) > 0.999999))
+    assert(appendedIds.nonEmpty)
+    // empty delete and empty append are identity on search output
+    val emptyIds = delIds.filter(col("vec_id") < 0)
+    val emptyBatch = appendBatch.filter(col("vec_id") < 0)
+    assert(results(Similarity.deleteFromIvfIndex(base, emptyIds,
+      "vec_id")) == results(base))
+    assert(results(Similarity.appendToIvfIndex(base, emptyBatch,
+      "vec_id", "embedding")) == results(base))
+    // both delete implementations agree: the broadcast pack-local
+    // filter (default) vs the distributed unpack → anti-join → repack
+    // (forced via maxBroadcast = -1, the driverCap convention)
+    assert(results(Similarity.deleteFromIvfIndex(base, delIds,
+        "vec_id", maxBroadcast = -1L)) ==
+      results(Similarity.deleteFromIvfIndex(base, delIds, "vec_id")))
+    // deleting EVERY bulk member leaves only appended neighbors
+    val allBulkGone = Similarity.appendToIvfIndex(
+      Similarity.deleteFromIvfIndex(base,
+        bulk.select(col("vec_id")), "vec_id"),
+      appendBatch, "vec_id", "embedding")
+    val onlyAppended = results(allBulkGone)
+    assert(onlyAppended.nonEmpty &&
+      onlyAppended.forall { case (_, nb, _) => appendedIds(nb) })
+    // UPSERT semantics (r14 review): replaying the same append — or
+    // re-appending an updated vector — must REPLACE, not duplicate.
+    // A duplicate entry would burn a top-k slot and distort any
+    // recall denominator; search results after the replay are
+    // byte-identical to the single append
+    val once = Similarity.appendToIvfIndex(base, appendBatch,
+      "vec_id", "embedding")
+    val replayed = Similarity.appendToIvfIndex(once, appendBatch,
+      "vec_id", "embedding")
+    assert(results(replayed) == results(once))
+    // ...and the member count did not grow
+    def memberCount(idx: Similarity.IvfIndex): Long = idx.memberPacks
+      .select(explode(col("mv"))).count()
+    assert(memberCount(replayed) == memberCount(once))
+  }
 }

@@ -350,4 +350,26 @@ class GraphOpsSpec extends SparkSpec {
     assert(GraphOps.triangleCounts(star)
       .as[(Long, Long)].collect().forall(_._2 == 0L))
   }
+
+  test("DriverGate probe: type guard skips the count, cap -1 forces " +
+      "distributed, and an eligible frame collects the exact pairs") {
+    val longEdges = Seq((1L, 2L), (2L, 3L), (5L, 5L))
+      .toDF("src", "dst")
+    // engaged: all three rows back, order preserved
+    val p = DriverGate.edges(longEdges, "src", "dst")
+    assert(p.count.contains(3L))
+    assert(p.edges.map(_.toSeq).contains(
+      Seq((1L, 2L), (2L, 3L), (5L, 5L))))
+    // forced distributed: count still taken (callers reuse it), no
+    // collect
+    val forced = DriverGate.edges(longEdges, "src", "dst", cap = -1L)
+    assert(forced.count.contains(3L) && forced.edges.isEmpty)
+    // type guard: string ids never engage AND never pay a count job
+    val stringEdges = Seq(("a", "b")).toDF("src", "dst")
+    assert(DriverGate.edges(stringEdges, "src", "dst") ==
+      DriverGate.Probe(None, None))
+    // over-cap: counted but not collected
+    val overCap = DriverGate.edges(longEdges, "src", "dst", cap = 2L)
+    assert(overCap.count.contains(3L) && overCap.edges.isEmpty)
+  }
 }
