@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.io.PerfTracker
+import graft.queries.StreamingQueries.SinkPrefix
 
 /** Benchmark main: times every registered query on the sf dir
   * from SPARK_GRAFT_SF_DIR and prints a JSON summary. Each query is
@@ -54,7 +55,7 @@ object Bench {
     // — the id is classload-order and the hash is per-instance
     .replaceAll("\\$\\$Lambda\\$\\d+/0x[0-9a-f]+", "\\$\\$Lambda")
     .replaceAll("@[0-9a-f]{6,}", "@")
-    .replaceAll("graft_stream\\w*", "graft_stream")
+    .replaceAll(SinkPrefix + "\\w*", SinkPrefix)
     // run-random filesystem locations (streaming/sink queries scan or
     // checkpoint under fresh temp dirs every run)
     .replaceAll("file:[^\\s\\]),]+", "file:")
@@ -142,7 +143,7 @@ object Bench {
   private[graft] def cleanUp(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.catalog.listTables().collect()
-      .filter(t => t.isTemporary && t.name.startsWith("graft_stream"))
+      .filter(t => t.isTemporary && t.name.startsWith(SinkPrefix))
       .foreach(t => spark.catalog.dropTempView(t.name))
   }
 

@@ -79,27 +79,10 @@ object Materialize {
     * the exchange moves full pre-combine rows that the narrow plan
     * would have collapsed in place (q169's bigramOcc: widening
     * regressed 1.71 → 2.40 s and was reverted). When the per-row work
-    * is trivial, the exchange is pure overhead either way — that is
-    * what `minRowsPerSlot` encodes. */
-  def widened(df: DataFrame): DataFrame = widened(df, 0L)
-
-  /** [[widened]] with an opt-in ROW FLOOR (r12 verdict #6): skip the
-    * exchange when the input has fewer than `minRowsPerSlot ×
-    * defaultParallelism` rows — below that, per-task fixed costs
-    * (scheduling, codegen entry) dominate any parallelism win and the
-    * exchange is measured overhead. The floor costs one `count()` of
-    * the input, so it is opt-in and only sensible on scan-shaped
-    * frames where the count collapses to parquet metadata. No library
-    * call site passes a floor yet — the q169 precedent applies:
-    * call sites adopt it WITH a measurement showing the count pays
-    * for itself, never speculatively (the widen-vs-not decision has
-    * already flipped both ways under measurement; see the rule text
-    * above and SCALING.md r12/r13). */
-  def widened(df: DataFrame, minRowsPerSlot: Long): DataFrame = {
+    * is trivial, the exchange is pure overhead either way. */
+  def widened(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (!scanShaped(df)) df
-    else if (df.rdd.getNumPartitions >= p) df
-    else if (minRowsPerSlot > 0 && df.count() < minRowsPerSlot * p) df
+    if (!scanShaped(df) || df.rdd.getNumPartitions >= p) df
     else df.repartition(p)
   }
 

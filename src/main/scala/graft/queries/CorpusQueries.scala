@@ -68,7 +68,7 @@ object CorpusQueries extends QueryModule {
     // blockings (probabilistic banding vs lossless rare-prefix join)
     // — equal output proves BOTH candidate generators lose nothing at
     // tau = 0.5, and the pair is differentially tested equal in
-    // Round11PropertySpec.
+    // CorpusOpsSpec.
     Q(
       "q329_prefix_filter_pairs",
       (s, d) => Dedup.prefixFilterJaccardPairs(
@@ -1933,7 +1933,7 @@ object CorpusQueries extends QueryModule {
     // (OracleSql.crossPrefixPairCtes) — one oracle, two independent
     // cross-frame blockings, same split (incoming = doc_id % 3 == 0,
     // trained = the rest). Differentially tested equal to
-    // crossCorpusJaccardPairs in Round12PropertySpec.
+    // crossCorpusJaccardPairs in CorpusOpsSpec.
     Q(
       "q331_cross_prefix_pairs",
       (s, d) => {

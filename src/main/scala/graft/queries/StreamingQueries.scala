@@ -3,14 +3,16 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.model.Tables
-import graft.streaming.{StreamingMerge, StreamOps}
+import graft.streaming.{MicroBatchRun, StreamingMerge, StreamOps}
 
 /** Driver-visible exercise of the Structured Streaming layer (SURVEY §2
   * S1–S7): these queries run REAL streaming plans — `readStream` file
-  * source → `Trigger.AvailableNow` → `foreachBatch` MERGE + atomic
-  * publish / watermarked window aggregation — and surface the result as
-  * a batch DataFrame the DuckDB oracle can restate.
+  * source → one [[MicroBatchRun]] (`Trigger.AvailableNow`) into a
+  * `foreachBatch` MERGE + atomic publish, a parquet append, or a memory
+  * table ([[toMemory]]) — and surface the result as a batch DataFrame
+  * the DuckDB oracle can restate.
   *
   * The reference's hourly cron run IS one micro-batch (scrape_and_
   * process.sh:1-24 + parse_data.py:213-233): each q41 streaming run
@@ -25,6 +27,21 @@ object StreamingQueries extends QueryModule {
     * deleted at JVM exit; the file-source checkpoint, input files, and
     * master live beneath it). */
   private def scratch(): String = graft.io.Scratch.dir("graft-stream-")
+
+  /** The name prefix of every memory table the harness streams into;
+    * [[graft.Bench]] drops the tables by it after each query and maps
+    * it away in plan fingerprints. */
+  val SinkPrefix = "graft_stream"
+
+  /** Runs `stream` to completion into a fresh memory table, checkpointed
+    * under a per-invocation scratch dir, and reads the table back. */
+  private def toMemory(stream: DataFrame, mode: OutputMode): DataFrame = {
+    val table = SinkPrefix + "_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    MicroBatchRun(stream, mode, scratch() + "/ckpt").memory(table)
+      .awaitTermination()
+    stream.sparkSession.table(table)
+  }
 
   /** Stage-once input staging (r7 brief item 3): the input parquet a
     * harness query feeds its stream is deterministic per (query, sf),
@@ -194,26 +211,15 @@ object StreamingQueries extends QueryModule {
     Q(
       "q42_streaming_rollup",
       (s, d) => withHarnessPartitions(s) {
-        val root = scratch()
         val ev = Tables.events(s, d).select(col("ts"), col("event_type"),
           col("value"))
         // write targets a SUBPATH of the staged root: the root itself
         // already exists (createTempDirectory), and Spark's
         // ErrorIfExists save mode refuses an existing path
         val inDir = staged("q42", d)(r => ev.write.parquet(s"$r/in")) + "/in"
-        val sinkTable = "graft_stream_rollup_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = StreamOps
-          .hourlyRollup(s.readStream.schema(ev.schema).parquet(inDir))
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory")
-          .queryName(sinkTable)
-          .start()
-        q.awaitTermination()
-        s.table(sinkTable).select(
+        toMemory(StreamOps.hourlyRollup(
+            s.readStream.schema(ev.schema).parquet(inDir)),
+          OutputMode.Update()).select(
           date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("event_type"), col("n"),
           col("total_value").cast("double").as("total_value"))
@@ -238,7 +244,6 @@ object StreamingQueries extends QueryModule {
     Q(
       "q75_streaming_sessionize",
       (s, d) => withHarnessPartitions(s) {
-        val root = scratch()
         val ev = Tables.events(s, d).select(col("ts"), col("user_id"),
           col("value"))
         val inDir = staged("q75", d) { dir =>
@@ -249,19 +254,9 @@ object StreamingQueries extends QueryModule {
             lit(-1L).as("user_id"), lit(0.0).as("value"))
           ev.unionByName(sentinel).coalesce(1).write.parquet(s"$dir/in")
         } + "/in"
-        val sinkTable = "graft_stream_sessions_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = StreamOps
-          .sessionize(s.readStream.schema(ev.schema).parquet(inDir))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory")
-          .queryName(sinkTable)
-          .start()
-        q.awaitTermination()
-        s.table(sinkTable).filter(col("user_id") =!= -1L)
+        toMemory(StreamOps.sessionize(
+            s.readStream.schema(ev.schema).parquet(inDir)),
+          OutputMode.Append()).filter(col("user_id") =!= -1L)
           .select(col("user_id"),
             date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss")
               .as("session_start"),
@@ -299,29 +294,17 @@ object StreamingQueries extends QueryModule {
     Q(
       "q53_streaming_dedup",
       (s, d) => withHarnessPartitions(s) {
-        val root = scratch()
         val ev = Tables.events(s, d).select(col("event_id"),
           col("user_id"), col("ts"), col("value"))
         val inDir = staged("q53", d) { r =>
           ev.write.mode("append").parquet(s"$r/in")
           ev.write.mode("append").parquet(s"$r/in") // duplicate delivery
         } + "/in"
-        val sink = "graft_stream_dedup_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = StreamOps
+        toMemory(StreamOps
           .dedupEvents(s.readStream.schema(ev.schema).parquet(inDir))
           .select(col("event_id"), col("user_id"),
             date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("tss"),
-            col("value"))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory")
-          .queryName(sink)
-          .start()
-        q.awaitTermination()
-        s.table(sink)
+            col("value")), OutputMode.Append())
       },
       Some("""SELECT event_id, user_id,
              |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS tss, value
@@ -338,7 +321,6 @@ object StreamingQueries extends QueryModule {
     Q(
       "q58_streaming_timeout_unpublish",
       (s, d) => withHarnessPartitions(s) {
-        val root = scratch()
         val quiet = 7L * 24 * 3600 * 1000
         // 1-in-37 events per 1-in-5 user: ~2 events/key, so SOME keys'
         // last activity predates the quiet horizon (timeout branch
@@ -351,20 +333,10 @@ object StreamingQueries extends QueryModule {
             col("event_id").as("seq"))
         val inDir = staged("q58", d)(r =>
           ev.coalesce(1).write.parquet(s"$r/in")) + "/in"
-        val sink = "graft_stream_timeout_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = StreamOps.lifecycleEventTime(
+        toMemory(StreamOps.lifecycleEventTime(
             s.readStream.schema(ev.schema).parquet(inDir),
-            quietMillis = quiet, watermarkDelay = "1 hour")
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory")
-          .queryName(sink)
-          .start()
-        q.awaitTermination()
-        s.table(sink).select(
+            quietMillis = quiet, watermarkDelay = "1 hour").toDF(),
+          OutputMode.Append()).select(
           col("key").cast("long").as("user_id"), col("kind"),
           col("price"), col("delta"), col("ts").as("ts_ms"))
       },
@@ -407,7 +379,6 @@ object StreamingQueries extends QueryModule {
     Q(
       "q93_streaming_asof",
       (s, d) => withHarnessPartitions(s) {
-        val root = scratch()
         val ev = Tables.events(s, d)
         val left = ev.filter(col("event_type") =!= "purchase")
           .select(lit(1).as("side"), col("event_id"), col("user_id"),
@@ -419,21 +390,9 @@ object StreamingQueries extends QueryModule {
         val inDir = staged("q93", d)(r =>
           left.unionByName(right).coalesce(1).write.parquet(s"$r/in")
         ) + "/in"
-        val sinkTable = "graft_stream_asof_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = StreamOps
-          .asOfJoinStream(s.readStream.schema(
-            left.schema).parquet(inDir))
-          .toDF()
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory")
-          .queryName(sinkTable)
-          .start()
-        q.awaitTermination()
-        s.table(sinkTable).select(col("event_id"), col("user_id"),
+        toMemory(StreamOps.asOfJoinStream(
+            s.readStream.schema(left.schema).parquet(inDir)).toDF(),
+          OutputMode.Append()).select(col("event_id"), col("user_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts"),
           col("value"),
           date_format(col("asof_ts"), "yyyy-MM-dd HH:mm:ss").as("asof_ts"),
@@ -582,7 +541,7 @@ object StreamingQueries extends QueryModule {
               java.nio.file.Paths.get(fixtureDir, name),
               java.nio.file.Paths.get(inDir, name))
           }
-          val q = s.readStream.format("binaryFile")
+          val files = s.readStream.format("binaryFile")
             .schema(org.apache.spark.sql.types.StructType(Seq(
               org.apache.spark.sql.types.StructField("path",
                 org.apache.spark.sql.types.StringType),
@@ -593,15 +552,12 @@ object StreamingQueries extends QueryModule {
               org.apache.spark.sql.types.StructField("content",
                 org.apache.spark.sql.types.BinaryType))))
             .load(s"$inDir/*.warc")
-            .writeStream
-            .foreachBatch { (batch: DataFrame, _: Long) =>
+          MicroBatchRun(files, OutputMode.Append(), ckpt)
+            .foreachBatch { (batch, _) =>
               graft.sources.WarcReader.records(batch)
                 .write.mode("append").parquet(outDir)
             }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+            .awaitTermination()
         }
         tick(Seq(0, 1))
         tick(Seq(2, 3))
@@ -651,18 +607,11 @@ object StreamingQueries extends QueryModule {
         // their own parquet dir via foreachBatch — the q41 pattern
         def tick(tickDir: String, outDir: String): Unit = {
           graft.io.Scratch.deliver(tickDir, inDir)
-          val q = StreamOps
-            .hourlyRollup(s.readStream.schema(schema).parquet(inDir),
-              watermark = "1 hour")
-            .writeStream
-            .outputMode("update")
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("append").parquet(outDir)
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          MicroBatchRun(StreamOps.hourlyRollup(
+              s.readStream.schema(schema).parquet(inDir),
+              watermark = "1 hour"), OutputMode.Update(), ckpt)
+            .foreachBatch((b, _) => b.write.mode("append").parquet(outDir))
+            .awaitTermination()
         }
         tick(s"$src/t0", s"$root/out1")
         tick(s"$src/t1", s"$root/out2")
@@ -724,7 +673,6 @@ object StreamingQueries extends QueryModule {
     Q(
       "q207_streaming_interval_join",
       (s, d) => withHarnessPartitions(s) {
-        val root = scratch()
         // a stream-stream join runs FOUR state stores per partition
         // (two per side); at 32 shuffle partitions that is 128 store
         // loads+commits per micro-batch, and the bench measured the
@@ -749,18 +697,8 @@ object StreamingQueries extends QueryModule {
           keyExpr = "user_id = p_user_id",
           leftTsCol = "ts", rightTsCol = "p_ts",
           lowerSec = 300L, upperSec = 300L)
-        val sinkTable = "graft_stream_ij_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = joined.select(col("event_id"), col("purchase_id"))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("memory")
-          .queryName(sinkTable)
-          .start()
-        q.awaitTermination()
-        s.table(sinkTable)
+        toMemory(joined.select(col("event_id"), col("purchase_id")),
+          OutputMode.Append())
       },
       Some("""SELECT p.event_id, i.event_id AS purchase_id
              |FROM events p
@@ -785,40 +723,29 @@ object StreamingQueries extends QueryModule {
     Q(
       "q267_streaming_outer_interval",
       (s, d) => withHarnessPartitions(s) {
-        val root = scratch()
-          val ev = Tables.events(s, d)
-          val far = lit("2100-01-01 00:00:00").cast("timestamp")
-          val left = ev.filter(col("event_type") === "click")
-            .select(col("event_id"), col("user_id"), col("ts"))
-            .union(s.range(1).select(lit(-1L).as("event_id"),
-              lit(-1L).as("user_id"), far.as("ts")))
-          val right = ev.filter(col("event_type") === "purchase")
-            .select(col("event_id").as("purchase_id"),
-              col("user_id").as("p_user_id"), col("ts").as("p_ts"))
-            .union(s.range(1).select(lit(-2L).as("purchase_id"),
-              lit(-2L).as("p_user_id"), far.as("p_ts")))
-          val src = staged("q267", d) { dir =>
-            left.coalesce(1).write.parquet(s"$dir/left")
-            right.coalesce(1).write.parquet(s"$dir/right")
-          }
-          val joined = StreamOps.intervalJoinStreamsLeftOuter(
-            s.readStream.schema(left.schema).parquet(s"$src/left"),
-            s.readStream.schema(right.schema).parquet(s"$src/right"),
-            keyExpr = "user_id = p_user_id",
-            leftTsCol = "ts", rightTsCol = "p_ts",
-            lowerSec = 300L, upperSec = 300L)
-          val sinkTable = "graft_stream_oij_" +
-            java.util.UUID.randomUUID().toString.replace("-", "")
-          val q = joined.select(col("event_id"), col("purchase_id"))
-            .writeStream
-            .outputMode("append")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("memory")
-            .queryName(sinkTable)
-            .start()
-          q.awaitTermination()
-          s.table(sinkTable).filter(col("event_id") >= 0)
+        val ev = Tables.events(s, d)
+        val far = lit("2100-01-01 00:00:00").cast("timestamp")
+        val left = ev.filter(col("event_type") === "click")
+          .select(col("event_id"), col("user_id"), col("ts"))
+          .union(s.range(1).select(lit(-1L).as("event_id"),
+            lit(-1L).as("user_id"), far.as("ts")))
+        val right = ev.filter(col("event_type") === "purchase")
+          .select(col("event_id").as("purchase_id"),
+            col("user_id").as("p_user_id"), col("ts").as("p_ts"))
+          .union(s.range(1).select(lit(-2L).as("purchase_id"),
+            lit(-2L).as("p_user_id"), far.as("p_ts")))
+        val src = staged("q267", d) { dir =>
+          left.coalesce(1).write.parquet(s"$dir/left")
+          right.coalesce(1).write.parquet(s"$dir/right")
+        }
+        val joined = StreamOps.intervalJoinStreamsLeftOuter(
+          s.readStream.schema(left.schema).parquet(s"$src/left"),
+          s.readStream.schema(right.schema).parquet(s"$src/right"),
+          keyExpr = "user_id = p_user_id",
+          leftTsCol = "ts", rightTsCol = "p_ts",
+          lowerSec = 300L, upperSec = 300L)
+        toMemory(joined.select(col("event_id"), col("purchase_id")),
+          OutputMode.Append()).filter(col("event_id") >= 0)
       },
       Some("""SELECT c.event_id, p.event_id AS purchase_id
              |FROM events c
@@ -856,21 +783,15 @@ object StreamingQueries extends QueryModule {
         graft.io.Scratch.deliver(s"$src/t0", inDir)
         val dim = broadcast(Tables.customer(s, d)
           .select(col("c_custkey"), col("c_mktsegment")))
-        val q = s.readStream.schema(schema).parquet(inDir)
+        val agg = s.readStream.schema(schema).parquet(inDir)
           .withColumn("cents",
             expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
           .join(dim, col("user_id") === col("c_custkey"))
           .groupBy(col("c_mktsegment"), col("event_type"))
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-          .writeStream
-          .outputMode("update")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("append").parquet(s"$root/out")
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        MicroBatchRun(agg, OutputMode.Update(), ckpt)
+          .foreachBatch((b, _) => b.write.mode("append").parquet(s"$root/out"))
+          .awaitTermination()
         s.read.parquet(s"$root/out")
       },
       Some("""SELECT c_mktsegment, event_type, count(*) AS n,
@@ -901,20 +822,11 @@ object StreamingQueries extends QueryModule {
           .select(col("ts"), col("user_id"), col("event_id")).schema
         def tick(tickDir: String, outDir: String): Unit = {
           graft.io.Scratch.deliver(tickDir, inDir)
-          val q = StreamOps
-            .quotaGate(s.readStream.schema(schema).parquet(inDir),
-              perDay = 2)
-            .writeStream
-            .outputMode("append")
-            .foreachBatch {
-              (b: org.apache.spark.sql.Dataset[StreamOps.QuotaOut],
-                  _: Long) =>
-                b.write.mode("append").parquet(outDir)
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          MicroBatchRun(StreamOps.quotaGate(
+              s.readStream.schema(schema).parquet(inDir), perDay = 2).toDF(),
+              OutputMode.Append(), ckpt)
+            .foreachBatch((b, _) => b.write.mode("append").parquet(outDir))
+            .awaitTermination()
         }
         tick(s"$src/t0", s"$root/out1")
         tick(s"$src/t1", s"$root/out2")
@@ -985,9 +897,9 @@ object StreamingQueries extends QueryModule {
         val outDir = s"$root/out"
         def tick(tickDir: String): Unit = {
           graft.io.Scratch.deliver(tickDir, inDir)
-          val q = s.readStream.schema(schema).parquet(inDir)
-            .writeStream
-            .foreachBatch { (batch: DataFrame, _: Long) =>
+          MicroBatchRun(s.readStream.schema(schema).parquet(inDir),
+              OutputMode.Append(), ckpt)
+            .foreachBatch { (batch, _) =>
               val D = graft.ops.Dedup
               val batchState =
                 D.spanGramState(batch, "doc_id", "text", l = 12)
@@ -1005,10 +917,7 @@ object StreamingQueries extends QueryModule {
                   D.readSpanGramState(s, stateDir), "doc_id", "text")
                 .write.mode("append").parquet(outDir)
             }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+            .awaitTermination()
         }
         tick(s"$src/t0")
         tick(s"$src/t1")
@@ -1077,9 +986,9 @@ object StreamingQueries extends QueryModule {
         val schema = s.read.parquet(s"$src/t0").schema
         def tick(tickDir: String): Unit = {
           graft.io.Scratch.deliver(tickDir, inDir)
-          val q = s.readStream.schema(schema).parquet(inDir)
-            .writeStream
-            .foreachBatch { (batch: DataFrame, _: Long) =>
+          MicroBatchRun(s.readStream.schema(schema).parquet(inDir),
+              OutputMode.Append(), ckpt)
+            .foreachBatch { (batch, _) =>
               // dedup against the pre-merge index (the batch never
               // pairs with itself here) and fold the batch in, as ONE
               // shared-frame, append-structured step: the dir step
@@ -1090,10 +999,7 @@ object StreamingQueries extends QueryModule {
                 .dedupAndMergePrefixIndexDir(s, idxDir, batch, "text")
                 .write.mode("append").parquet(outDir)
             }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+            .awaitTermination()
         }
         tick(s"$src/t0")
         tick(s"$src/t1")

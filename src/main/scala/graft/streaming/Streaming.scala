@@ -6,6 +6,25 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery, Trigger}
 
+/** The one way a stream runs here: `stream` in output `mode`,
+  * checkpointed under `checkpointDir`, started under
+  * `Trigger.AvailableNow` — a run consumes what has arrived since the
+  * checkpoint and stops, as the reference's hourly cron run does. */
+final case class MicroBatchRun(stream: DataFrame, mode: OutputMode,
+    checkpointDir: String) {
+  private def writer = stream.writeStream.outputMode(mode)
+    .option("checkpointLocation", checkpointDir)
+    .trigger(Trigger.AvailableNow())
+
+  /** Runs `f(batch, batchId)` on every micro-batch. */
+  def foreachBatch(f: (DataFrame, Long) => Unit): StreamingQuery =
+    writer.foreachBatch(f).start()
+
+  /** Collects the output into the in-memory table `table`. */
+  def memory(table: String): StreamingQuery =
+    writer.format("memory").queryName(table).start()
+}
+
 /** Streaming restatement of the reference's incremental semantics
   * (SURVEY §2 H): the hourly cron batch IS a micro-batch stream —
   * `foreachBatch` + MERGE is the engine's S1/S2 realization; windowed
@@ -19,17 +38,12 @@ object StreamingMerge {
     * under `checkpointDir`, so a batch replayed after a crash is skipped.
     */
   def start(batches: DataFrame, masterPath: String,
-      checkpointDir: String, seqCol: Option[String] = None): StreamingQuery = {
-    batches.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      checkpointDir: String, seqCol: Option[String] = None): StreamingQuery =
+    MicroBatchRun(batches, OutputMode.Update(), checkpointDir)
+      .foreachBatch { (batch, batchId) =>
         mergeIntoMaster(batch.sparkSession, batch, masterPath, seqCol,
           Some(checkpointDir -> batchId))
       }
-      .start()
-  }
 
   /** One micro-batch merge + atomic publish (callable from batch mode
     * too — the cron-driven E2 entry uses exactly this).
@@ -113,11 +127,11 @@ object StreamOps {
   case class CdcEvent(key: String, kind: String, price: Option[Double],
       delta: Option[Double], ts: Long)
 
-  /** S4 on EVENT time — the deterministic (and therefore driver-
-    * checkable) twin of [[lifecycle]]'s processing-time timeout: a key
-    * with no event for `quietMillis` of EVENT time past the watermark is
-    * declared unpublished. Under `Trigger.AvailableNow` the final
-    * watermark is `max(event ts) - delay`, so which keys time out is a
+  /** S4 on EVENT time, which makes the timeout deterministic and
+    * therefore driver-checkable: a key with no event for `quietMillis`
+    * of EVENT time past the watermark is declared unpublished. Under
+    * `Trigger.AvailableNow` the final watermark is
+    * `max(event ts) - delay`, so which keys time out is a
     * pure function of the data — the oracle restates it as
     * `last_active + quiet < max(ts) - delay` (Spark fires event-time
     * timeouts strictly below the watermark).
@@ -343,7 +357,8 @@ object StreamOps {
     * not retroactively applied — exactness requires per-key event-time
     * order across batch boundaries.
     *
-    * State is ONE small struct per key (bounded, like [[lifecycle]]);
+    * State is ONE small struct per key (bounded, like
+    * [[lifecycleEventTime]]'s);
     * per-batch group sort materializes only that key's batch slice.
     *
     * @param tagged single input stream with columns
@@ -377,47 +392,6 @@ object StreamOps {
       }
   }
 
-  /** @param quietMillis idle period after which a key is declared
-    *        unpublished; ≤ 0 disables the timeout (NB: a processing-time
-    *        timeout keeps the query triggering forever, which also makes
-    *        `processAllAvailable` in tests never settle). */
-  def lifecycle(input: Dataset[(String, Double, Long)],
-      quietMillis: Long): Dataset[CdcEvent] = {
-    import input.sparkSession.implicits._
-    val timeoutMode =
-      if (quietMillis > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    input.groupByKey(_._1)
-      .flatMapGroupsWithState[KeyState, CdcEvent](
-        OutputMode.Append(), timeoutMode) {
-        case (key, rows, state: GroupState[KeyState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(CdcEvent(key, "unpublished", s.lastPrice, None, s.lastActive))
-          } else {
-            val sorted = rows.toSeq.sortBy(_._3)
-            var st = state.getOption.getOrElse(KeyState(None, 0L, 0))
-            val out = sorted.flatMap { case (_, price, ts) =>
-              val ev = st.lastPrice match {
-                case None =>
-                  Some(CdcEvent(key, "insert", Some(price), None, ts))
-                case Some(p) if p != price =>
-                  Some(CdcEvent(key, "price_change", Some(price),
-                    Some(price - p), ts))
-                case _ => None
-              }
-              st = KeyState(Some(price), ts, st.changes +
-                (if (ev.exists(_.kind == "price_change")) 1 else 0))
-              ev
-            }
-            state.update(st)
-            if (quietMillis > 0) state.setTimeoutDuration(quietMillis)
-            out.iterator
-          }
-      }
-  }
-
   /** Streaming NEAR-DEDUP against the trained corpus — the incremental
     * ingest gate: each micro-batch of incoming documents runs the
     * proven batch cross-corpus LSH pipeline (MinHash signatures →
@@ -439,15 +413,11 @@ object StreamOps {
   def nearDupAgainstCorpusStream(stream: DataFrame,
       index: graft.ops.Dedup.CorpusIndex, textCol: String, tau: Double,
       outPath: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    MicroBatchRun(stream, OutputMode.Append(), checkpointDir)
+      .foreachBatch { (batch, _) =>
         graft.ops.Dedup.crossCorpusAgainstIndex(batch, index, textCol, tau)
           .write.mode("append").parquet(outPath)
       }
-      .start()
 
   /** STREAMING exact-size uniform sample —
     * [[graft.ops.Sampling.sampleExact]] maintained incrementally over
@@ -470,11 +440,8 @@ object StreamOps {
       seed: String, samplePath: String,
       checkpointDir: String): StreamingQuery = {
     require(n >= 1 && n <= Int.MaxValue, s"n must be in [1, 2^31), got $n")
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    MicroBatchRun(stream, OutputMode.Append(), checkpointDir)
+      .foreachBatch { (batch, _) =>
         val spark = batch.sparkSession
         val hashed = batch.withColumn("__r",
           graft.ops.Dedup.md5Hash60(concat(
@@ -486,6 +453,5 @@ object StreamOps {
             .orderBy(col("__r").asc, col(keyCol).asc).limit(n.toInt),
           samplePath)
       }
-      .start()
   }
 }

@@ -181,4 +181,58 @@ class BenchContractSpec extends AnyFunSuite {
     assert(!line.contains("\"rep\"") && !line.contains("retry_of") &&
       !line.contains("suspect") && !line.contains("\"plan\""))
   }
+
+  test("planFingerprint2: invariant across rebuilds of the same query " +
+      "(exprIds normalized away), distinct for a different plan") {
+    val spark = TestSpark.spark
+    import org.apache.spark.sql.functions._
+    import graft.ops.{Dedup, Multimodal}
+    val d = "/root/testdata/sf0.001"
+    def built(): org.apache.spark.sql.DataFrame = {
+      val df = graft.model.Tables.documents(spark, d)
+        .groupBy(col("lang")).agg(count(lit(1)).as("n"))
+      df.count() // finalize the adaptive plan before fingerprinting
+      df
+    }
+    val a = graft.Bench.planFingerprint2(built())
+    val b = graft.Bench.planFingerprint2(built())
+    // two builds allocate different expression ids — the normalized
+    // fingerprint must not see them
+    assert(a == b)
+    // the harder case: a query with materialized intermediates and
+    // HOF lambdas (whose variable names carry a global counter —
+    // the first fingerprint version leaked it, three reps → three
+    // "plans")
+    def builtDedup(): org.apache.spark.sql.DataFrame = {
+      val df = Dedup.ngramJaccardPairs(
+        graft.model.Tables.documents(spark, d)
+          .select(col("doc_id"), col("text")),
+        "doc_id", "text", n = 3, tau = 0.5)
+      df.count()
+      df
+    }
+    assert(graft.Bench.planFingerprint2(builtDedup()) ==
+      graft.Bench.planFingerprint2(builtDedup()))
+    // ...and the typed-API case: MapPartitions nodes print the closure
+    // as Class$$Lambda$<classload-order>/0x<addr>@<instance-hash> —
+    // all three vary per rep/JVM and must normalize away (q171's three
+    // reps fingerprinted as three different "plans" before this)
+    def builtMapPartitions(): org.apache.spark.sql.DataFrame = {
+      val dir = graft.sources.PngFixtures.write(spark, d)
+      val bin = spark.read.format("binaryFile").load(s"$dir/*.png")
+        .select(regexp_extract(col("path"), "img_(\\d+)\\.png", 1)
+          .cast("long").as("doc_id"), col("content"))
+      val df = Multimodal.resizeImages(bin, "doc_id", "content", 8, 8)
+      df.count()
+      df
+    }
+    assert(graft.Bench.planFingerprint2(builtMapPartitions()) ==
+      graft.Bench.planFingerprint2(builtMapPartitions()))
+    assert(a.length == 12 && a.forall(c => c.isDigit || ('a' to 'f')
+      .contains(c)), a)
+    val other = graft.model.Tables.documents(spark, d)
+      .filter(col("n_chars") > 100).select(col("doc_id"))
+    other.count()
+    assert(graft.Bench.planFingerprint2(other) != a)
+  }
 }

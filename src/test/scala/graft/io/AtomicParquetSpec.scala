@@ -38,20 +38,9 @@ class AtomicParquetSpec extends SparkSpec {
     graft.streaming.StreamingMerge.mergeIntoMaster(spark,
       Seq(("1", "2026-01-01 10:00:00", 100.0), ("2", "2026-01-01 11:00:00", 200.0))
         .toDF("offer_id", "updated_date", "price_value"), dir)
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    val master = try {
-      val m = AtomicParquet.read(spark, dir, sys.error("a published master needs no schema"))
-      org.apache.spark.TestListenerBus.drain(sc)
-      m
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 0)
+    val (master, jobs) = jobsDuring(
+      AtomicParquet.read(spark, dir, sys.error("a published master needs no schema")))
+    assert(jobs == 0)
     val plain = spark.read.parquet(dir)
     assert(plain.schema == master.schema)
     assert(plain.count() == 2)

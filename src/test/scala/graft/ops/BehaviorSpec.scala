@@ -106,4 +106,18 @@ class BehaviorSpec extends SparkSpec {
     assert(out((2L, 0L)) == ((1L, 1L, 1000L)))
     assert(out.size == 3)
   }
+
+  test("funnelSteps: reach counts are monotonically non-increasing " +
+      "down the funnel on random event streams") {
+    val rnd = new scala.util.Random(37)
+    val types = Seq("signup", "click", "purchase", "error")
+    val ev = (1 to 800).map { _ =>
+      (rnd.nextInt(60).toLong, rnd.nextInt(1000).toDouble,
+        types(rnd.nextInt(types.size))) }
+    val out = Behavior.funnelSteps(ev.toDF("user_id", "ts", "event_type"),
+        "user_id", "ts", "event_type", Seq("signup", "click", "purchase"))
+      .orderBy($"step_idx").collect().map(_.getAs[Long]("n_reached"))
+    assert(out.length == 3)
+    assert(out.sliding(2).forall(p => p(0) >= p(1)))
+  }
 }

@@ -1205,4 +1205,227 @@ class CorpusOpsSpec extends SparkSpec {
       .select(explode(col("mv"))).count()
     assert(memberCount(replayed) == memberCount(once))
   }
+
+  test("duplicateSpans: spans are disjoint with gaps > 0, each >= l, " +
+      "inside the doc, and the span set is corpus-order invariant") {
+    val rnd = new scala.util.Random(107)
+    val vocab = (0 until 12).map(i => s"w$i")
+    def doc(n: Int): String =
+      (0 until n).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    // small vocab + 40-120-token docs → plenty of genuine repeats
+    val docs = (1L to 30L).map(i => (i, doc(40 + rnd.nextInt(80))))
+    val l = 4
+    val out = Dedup.duplicateSpans(docs.toDF("doc_id", "text"),
+        "doc_id", "text", l = l)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(out.nonEmpty) // the construction guarantees duplicates
+    val lens = docs.map { case (i, t) => i -> t.split(" ").length }.toMap
+    out.groupBy(_._1).foreach { case (id, spans) =>
+      val sorted = spans.sortBy(_._2)
+      sorted.foreach { case (_, s, e) =>
+        assert(e - s >= l && s >= 1 && e <= lens(id) + 1,
+          s"doc $id span [$s,$e) vs len ${lens(id)}")
+      }
+      sorted.toSeq.sliding(2).foreach {
+        case Seq((_, _, e1), (_, s2, _)) =>
+          assert(s2 > e1, s"doc $id: spans merge-adjacent or overlap")
+        case _ =>
+      }
+    }
+    // shuffling the corpus rows changes nothing (frequency is global)
+    val shuffled = Dedup.duplicateSpans(
+        rnd.shuffle(docs).toDF("doc_id", "text"), "doc_id", "text", l = l)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(shuffled.toSet == out.toSet)
+  }
+
+  test("duplicateCoverage: every doc present, spans account exactly, " +
+      "fraction bounded, zero-coverage docs report 0") {
+    val rnd = new scala.util.Random(113)
+    val vocab = Vector("alpha", "bravo", "charlie", "delta", "echo",
+      "foxtrot", "golf", "hotel")
+    def sentence(n: Int): String =
+      (1 to n).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val boiler = "one two three four five six seven eight"
+    // docs 1/2 share the planted 8-token boilerplate; docs 3+ are
+    // random (may or may not collide — the invariants don't care)
+    val docs = Seq(
+      (1L, s"${sentence(20)} $boiler ${sentence(15)}"),
+      (2L, s"$boiler ${sentence(30)}"),
+      (3L, sentence(25)),
+      (4L, sentence(4)), // shorter than l → no grams, coverage 0
+    ).toDF("doc_id", "text")
+    val l = 8
+    val cov = Dedup.duplicateCoverage(docs, "doc_id", "text", l)
+      .collect().map(r => r.getLong(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    assert(cov.keySet == Set(1L, 2L, 3L, 4L))
+    // accounting: dup_tokens equals the sum of merged span lengths
+    val spans = Dedup.duplicateSpans(docs, "doc_id", "text", l)
+      .collect().groupBy(_.getLong(0))
+      .view.mapValues(_.map(r => r.getLong(3)).sum).toMap
+    cov.foreach { case (id, (nTok, dup, pm)) =>
+      assert(dup == spans.getOrElse(id, 0L), s"doc $id")
+      assert(dup >= 0 && dup <= nTok, s"doc $id: $dup vs $nTok")
+      assert(pm == 1000 * dup / math.max(nTok, 1L), s"doc $id")
+      assert(pm >= 0 && pm <= 1000)
+    }
+    // the planted pair is detected; the short doc reports zero
+    assert(cov(1L)._2 >= l && cov(2L)._2 >= l)
+    assert(cov(4L)._2 == 0L && cov(4L)._3 == 0L)
+  }
+
+  test("prefixFilterJaccardPairs equals ngramJaccardPairs: two " +
+      "independent candidate blockings, one exact pair truth") {
+    import org.apache.spark.sql.functions.col
+    val docs = graft.model.Tables
+      .documents(spark, "/root/testdata/sf0.001")
+      .select(col("doc_id"), col("text"))
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1),
+        r.getDouble(2))).toSet
+    val lsh = pairs(Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+      n = 3, tau = 0.5))
+    val pf = pairs(Dedup.prefixFilterJaccardPairs(docs, "doc_id",
+      "text", n = 3, tau = 0.5))
+    assert(pf == lsh, s"prefix-filter ${pf.size} vs LSH ${lsh.size}")
+    assert(pf.nonEmpty) // the fixture corpus has planted near-dups
+    // space-padded text: both paths trim before tokenizing (the house
+    // gram convention, r12 — SQL trim strips SPACES, matching the
+    // oracles' string_split(trim(text))) — a padded verbatim copy of
+    // doc 1 must score jaccard 1.0 against it on BOTH paths (untrimmed,
+    // the leading pad grows a "" token via split's keep-leading-empty
+    // semantics and the copy scores < 1)
+    val padded = docs.unionByName(
+      docs.filter(col("doc_id") === 1)
+        .select((col("doc_id") + 2000000).as("doc_id"),
+          concat(lit("   "), col("text"), lit("  ")).as("text")))
+    Seq(
+      pairs(Dedup.ngramJaccardPairs(padded, "doc_id", "text",
+        n = 3, tau = 0.5)),
+      pairs(Dedup.prefixFilterJaccardPairs(padded, "doc_id", "text",
+        n = 3, tau = 0.5)),
+    ).foreach { ps =>
+      assert(ps.exists { case (a, b, j) =>
+        a == 1L && b == 2000001L && j == 1.0 }, ps.toString)
+    }
+    // planted sanity: a verbatim copy scores jaccard 1.0 and survives
+    // both paths
+    val aug = docs.unionByName(
+      docs.filter(col("doc_id") === 1)
+        .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+    val dup = pairs(Dedup.prefixFilterJaccardPairs(aug, "doc_id",
+      "text", n = 3, tau = 0.5))
+    assert(dup.exists { case (a, b, j) =>
+      a == 1L && b == 1000001L && j == 1.0 })
+  }
+
+  test("crossCorpusPrefixFilterPairs equals crossCorpusJaccardPairs: " +
+      "two independent cross-frame blockings, one exact pair truth") {
+    val docs = graft.model.Tables
+      .documents(spark, "/root/testdata/sf0.001")
+      .select(col("doc_id"), col("text"))
+    val newSide = docs.filter(col("doc_id") % 3 === 0)
+    val oldSide = docs.filter(col("doc_id") % 3 =!= 0)
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1),
+        r.getDouble(2))).toSet
+    val lsh = pairs(Dedup.crossCorpusJaccardPairs(newSide, oldSide,
+      "doc_id", "text", n = 3, tau = 0.5))
+    val pf = pairs(Dedup.crossCorpusPrefixFilterPairs(newSide, oldSide,
+      "doc_id", "text", n = 3, tau = 0.5))
+    assert(pf == lsh, s"prefix-filter ${pf.size} vs LSH ${lsh.size}")
+    assert(pf.nonEmpty) // the fixture corpus has planted near-dups
+    // a verbatim copy planted across the frames scores jaccard 1.0
+    val donor = oldSide.limit(1)
+      .select((col("doc_id") + 3000000).as("doc_id"), col("text"))
+    val donorId = donor.collect()(0).getLong(0)
+    val matched = pairs(Dedup.crossCorpusPrefixFilterPairs(
+      newSide.unionByName(donor.select(
+        // keep the new-side id ≡ 0 (mod 3) irrelevant here — the op
+        // takes the frames as given, no residue assumption
+        col("doc_id"), col("text"))),
+      oldSide, "doc_id", "text", n = 3, tau = 0.5))
+    assert(matched.exists { case (a, _, j) => a == donorId && j == 1.0 },
+      matched.toString)
+  }
+
+  test("driver-local union-find equals both distributed CC loops on " +
+      "paths, cycles, stars and random graphs") {
+    val rnd = new scala.util.Random(41)
+    def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val graphs: Seq[Seq[(Long, Long)]] = Seq(
+      (1L to 30L).sliding(2).map(s => (s(0), s(1))).toSeq, // path
+      (1L to 20L).sliding(2).map(s => (s(0), s(1))).toSeq :+
+        ((20L, 1L)), // cycle
+      (2L to 15L).map(i => (1L, i)), // star
+      Seq.fill(60)((rnd.nextInt(40).toLong + 1, // random multigraph
+        rnd.nextInt(40).toLong + 1)).filter(p => p._1 != p._2),
+      Seq((5L, 5L), (7L, 7L), (3L, 9L)), // self-loops → singletons
+    )
+    graphs.zipWithIndex.foreach { case (g, gi) =>
+      val pairs = g.toDF("id_a", "id_b")
+      // driverCap = -1 forces the distributed loops; default engages
+      // the union-find gate (small long-id graphs)
+      // maxIter raised for the forced-distributed propagation run: the
+      // 30-node path's diameter exceeds the default 25 (the documented
+      // O(diameter) bound the star form exists to beat)
+      val prop = labelsOf(Dedup.duplicateClusters(pairs,
+        maxIter = 40, driverCap = -1L))
+      val star = labelsOf(Dedup.duplicateClustersStar(pairs,
+        driverCap = -1L))
+      val ufProp = labelsOf(Dedup.duplicateClusters(pairs))
+      val ufStar = labelsOf(Dedup.duplicateClustersStar(pairs))
+      assert(ufProp == prop, s"graph $gi: union-find vs propagation")
+      assert(ufStar == star, s"graph $gi: union-find vs star")
+    }
+    // non-long id columns must keep the distributed path (schema
+    // stability): int ids still produce correct labels
+    val intPairs = Seq((1, 2), (2, 3), (7, 8)).toDF("id_a", "id_b")
+    val viaInt = Dedup.duplicateClusters(intPairs).collect()
+      .map(r => r.getInt(0) -> r.getInt(1)).toMap
+    assert(viaInt == Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 7, 8 -> 7))
+  }
+
+  test("dedupByCoverage: survivors + dropped partition the corpus, " +
+      "dropped is exactly the over-threshold coverage manifest") {
+    val rnd = new scala.util.Random(31)
+    val vocab = Vector("alpha", "bravo", "charlie", "delta", "echo",
+      "foxtrot", "golf", "hotel", "india", "juliet")
+    def sentence(n: Int): String =
+      (1 to n).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val boiler = "one two three four five six seven eight nine ten " +
+      "eleven twelve"
+    // docs 1/2: mostly boilerplate (high coverage); 3/4: a touch of it
+    // (low); 5: clean; 6: too short for any anchor
+    val docs = Seq(
+      (1L, s"$boiler $boiler ${sentence(4)}"),
+      (2L, s"${sentence(3)} $boiler $boiler"),
+      (3L, s"${sentence(40)} $boiler ${sentence(40)}"),
+      (4L, s"$boiler ${sentence(90)}"),
+      (5L, sentence(60)),
+      (6L, sentence(5)),
+    ).toDF("doc_id", "text")
+    val l = 12
+    val maxPm = 500L
+    val cov = Dedup.duplicateCoverage(docs, "doc_id", "text", l)
+      .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
+    val r = Dedup.dedupByCoverage(docs, "doc_id", "text", l, maxPm)
+    val kept = r.survivors.select("doc_id").collect()
+      .map(_.getLong(0)).toSet
+    val dropped = r.dropped.collect()
+      .map(x => x.getLong(0) -> x.getLong(3)).toMap
+    // partition: every doc on exactly one side
+    assert(kept.intersect(dropped.keySet).isEmpty)
+    assert(kept ++ dropped.keySet == cov.keySet)
+    // the threshold is the coverage number, applied verbatim
+    assert(kept == cov.filter(_._2 <= maxPm).keySet)
+    assert(dropped == cov.filter(_._2 > maxPm))
+    // survivors keep the FULL input schema
+    assert(r.survivors.columns.toSeq == docs.columns.toSeq)
+    // the planted boilerplate docs drop; the clean/short docs survive
+    assert(!kept.contains(1L) && !kept.contains(2L))
+    assert(kept.contains(5L) && kept.contains(6L))
+  }
 }

@@ -43,23 +43,6 @@ class DedupPersistenceSpec extends SparkSpec {
 
   private def tmpDir(tag: String): String = Scratch.dir(s"graft-dedup-$tag-")
 
-  /** `body`'s result and the number of Spark jobs it ran. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.TestListenerBus.drain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** Index write, two index ticks, three span-state appends (each one
     * past the first compacts); returns each tick's pairs and the bar. */
   private def run(root: String): (Seq[Set[Seq[Any]]], Set[Seq[Any]]) = {

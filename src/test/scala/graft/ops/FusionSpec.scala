@@ -178,4 +178,68 @@ class FusionSpec extends SparkSpec {
       assert(key(wide) == key(bcast))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
   }
+
+  test("rrfFuse: invariant to input row order and run interleaving") {
+    val rnd = new scala.util.Random(29)
+    val rows = (1 to 200).map { _ =>
+      (rnd.nextInt(5).toLong, rnd.nextInt(40).toLong,
+        rnd.nextInt(10).toLong + 1) }
+      .distinct
+    def fused(rs: Seq[(Long, Long, Long)]): Set[(Long, Long, Long, Int)] =
+      Fusion.rrfFuse(rs.toDF("q", "doc", "rank"), "q", "doc", "rank")
+        .select($"query".cast("long"), $"doc", $"rrf_ppb", $"fused_rank")
+        .as[(Long, Long, Long, Int)].collect().toSet
+    assert(fused(rows) == fused(rnd.shuffle(rows)))
+  }
+
+  test("mmrSelect: selections ⊆ candidates, ranks contiguous from 1, " +
+      "no doc selected twice, count == min(k, |cands|)") {
+    val rnd = new scala.util.Random(31)
+    val cands = (1 to 120).map { i =>
+      (i % 7L, i.toLong, rnd.nextInt(1000).toLong) }
+    val sims = for {
+      q <- 0L until 7L
+      a <- cands.filter(_._1 == q).map(_._2)
+      b <- cands.filter(_._1 == q).map(_._2) if a < b && rnd.nextBoolean()
+    } yield (q, a, b, rnd.nextInt(1000000).toLong)
+    val out = Fusion.mmrSelect(cands.toDF("qid", "doc", "rel_micro"),
+        sims.toDF("qid", "doc_a", "doc_b", "sim_micro"),
+        k = 5, lambdaPermille = 600)
+      .as[(Long, Long, Int, Long)].collect()
+    val byQ = out.groupBy(_._1)
+    val candsByQ = cands.groupBy(_._1)
+    byQ.foreach { case (q, sel) =>
+      val docs = sel.map(_._2)
+      assert(docs.distinct.length == docs.length)
+      assert(docs.toSet.subsetOf(candsByQ(q).map(_._2).toSet))
+      assert(sel.map(_._3).sorted.toSeq ==
+        (1 to math.min(5, candsByQ(q).size)).toSeq)
+    }
+  }
+
+  test("mmrDiversifyEmbeddings: per-query ranks are contiguous 1..k, " +
+      "selections are distinct and drawn from the true top-N shortlist") {
+    import org.apache.spark.sql.functions.col
+    val rnd = new scala.util.Random(109)
+    val emb = (0L until 60L).map(i =>
+      (i, Seq.fill(8)(rnd.nextDouble() * 2 - 1)))
+    val df = emb.toDF("vec_id", "embedding")
+    val n = 6; val k = 3
+    val out = Fusion.mmrDiversifyEmbeddings(df, "vec_id", "embedding",
+        col("vec_id") % 20 === 0, shortlistN = n, k = k,
+        lambdaPermille = 500)
+      .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("doc"),
+        r.getAs[Int]("mmr_rank")))
+    val shortlist = Similarity.cosineTopKKernelForQueries(df, "vec_id",
+        "embedding", n, col("vec_id") % 20 === 0)
+      .collect().map(r => (r.getAs[Long]("id"),
+        r.getAs[Long]("neighbor_id"))).toSet
+    out.groupBy(_._1).foreach { case (qid, rows) =>
+      assert(rows.map(_._3).sorted.toSeq == (1 to k))
+      assert(rows.map(_._2).distinct.length == k)
+      rows.foreach { case (q, d, _) =>
+        assert(shortlist.contains((q, d)), s"($q,$d) not in shortlist") }
+    }
+    assert(out.groupBy(_._1).size == 3) // vec_ids 0, 20, 40
+  }
 }

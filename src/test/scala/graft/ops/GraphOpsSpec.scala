@@ -372,4 +372,98 @@ class GraphOpsSpec extends SparkSpec {
     val overCap = DriverGate.edges(longEdges, "src", "dst", cap = 2L)
     assert(overCap.count.contains(3L) && overCap.edges.isEmpty)
   }
+
+  test("wlGraphSignature: invariant under random node relabeling and " +
+      "graph-id renaming (isomorphism never changes the signature)") {
+    val rnd = new scala.util.Random(103)
+    // a random 14-node graph, then the SAME graph under a random
+    // permutation of node ids — signatures must match at every depth
+    val edges = (1 to 25).map(_ =>
+      (rnd.nextInt(14).toLong, rnd.nextInt(14).toLong))
+      .filter { case (a, b) => a != b }.distinct
+    val perm = rnd.shuffle((0L to 13L).toVector)
+    val relabeled = edges.map { case (a, b) =>
+      (perm(a.toInt), perm(b.toInt)) }
+    val df = (edges.map { case (a, b) => (1L, a, b) } ++
+      relabeled.map { case (a, b) => (2L, a, b) })
+      .toDF("graph_id", "src", "dst")
+    for (r <- Seq(0, 1, 3)) {
+      val sig = GraphOps.wlGraphSignature(df, "graph_id", "src", "dst",
+          rounds = r)
+        .collect().map(x => x.getString(0) ->
+          ((x.getLong(1), x.getString(2)))).toMap
+      assert(sig("1") == sig("2"), s"rounds=$r")
+    }
+  }
+
+  test("wlGraphSignatureOrderFree: invariant under random relabeling, " +
+      "and groups graphs exactly like the sorted-md5 form") {
+    val rnd = new scala.util.Random(111)
+    // family: a random 12-node graph G, an isomorphic copy under a
+    // random permutation, and a NON-isomorphic variant (one extra
+    // edge) — order-free signatures must merge the first two and
+    // separate the third, at every depth, exactly as the sorted form
+    val edges = (1 to 22).map(_ =>
+      (rnd.nextInt(12).toLong, rnd.nextInt(12).toLong))
+      .filter { case (a, b) => a != b }.distinct
+    val perm = rnd.shuffle((0L to 11L).toVector)
+    val iso = edges.map { case (a, b) => (perm(a.toInt), perm(b.toInt)) }
+    // graph 3 = graph 1 plus one GUARANTEED-new undirected edge (the
+    // first enumerated pair absent from the normalized edge set), so
+    // its degree multiset — and hence every signature depth — differs
+    val norm = edges.map { case (a, b) =>
+      (math.min(a, b), math.max(a, b)) }.toSet
+    val newEdge = (for { a <- 0L to 11L; b <- (a + 1) to 11L
+      if !norm((a, b)) } yield (a, b)).head
+    val extra = edges :+ newEdge
+    val df = (edges.map { case (a, b) => (1L, a, b) } ++
+      iso.map { case (a, b) => (2L, a, b) } ++
+      extra.map { case (a, b) => (3L, a, b) })
+      .toDF("graph_id", "src", "dst")
+    for (r <- Seq(0, 1, 3)) {
+      val free = GraphOps.wlGraphSignatureOrderFree(
+          df, "graph_id", "src", "dst", rounds = r).collect()
+        .map(x => x.getString(0) ->
+          ((x.getLong(1), x.getLong(2), x.getLong(3)))).toMap
+      assert(free("1") == free("2"), s"rounds=$r: iso copies diverged")
+      // the extra-edge variant must SEPARATE: its degree multiset
+      // differs, so the label multiset differs at every depth
+      assert((free("3")._2, free("3")._3) !=
+        (free("1")._2, free("1")._3), s"rounds=$r: extra edge merged")
+      val sorted = GraphOps.wlGraphSignature(
+          df, "graph_id", "src", "dst", rounds = r).collect()
+        .map(x => x.getString(0) -> x.getString(2)).toMap
+      // grouping agreement: the two forms induce the SAME partition of
+      // the family (recall is construction-identical; this family has
+      // no engineered sum collision)
+      def groups(sig: Map[String, Any]): Set[Set[String]] =
+        sig.groupBy(_._2).values.map(_.keySet).toSet
+      assert(groups(free) == groups(sorted), s"rounds=$r")
+      // residues sit in their moduli
+      free.values.foreach { case (_, p1, p2) =>
+        assert(p1 >= 0 && p1 < 1000000007L)
+        assert(p2 >= 0 && p2 < 998244353L)
+      }
+    }
+  }
+
+  test("wlGraphSignature family rejects ':' in graph ids loudly " +
+      "(silent truncation would mis-group labels)") {
+    val bad = Seq(("a:b", 1L, 2L), ("a:b", 2L, 3L))
+      .toDF("graph_id", "src", "dst")
+    val e = intercept[Exception] {
+      GraphOps.wlGraphSignature(bad, "graph_id", "src", "dst", 1)
+        .collect()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil
+      else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("scoping separator")), e.toString)
+    // the order-free form shares the guard
+    val e2 = intercept[Exception] {
+      GraphOps.wlGraphSignatureOrderFree(bad, "graph_id", "src",
+        "dst", 1).collect()
+    }
+    assert(msgs(e2).exists(_.contains("scoping separator")), e2.toString)
+  }
 }

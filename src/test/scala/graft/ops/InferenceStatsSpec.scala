@@ -358,4 +358,62 @@ class InferenceStatsSpec extends SparkSpec {
     // phantom window-ends (1,2,4..9 etc.) must not appear
     assert(out == Map(0L -> 1L, 3L -> 2L, 10L -> 1L))
   }
+
+  test("rocAucExact: AUC(y) + AUC(1−y) == 1 (midrank symmetry) and " +
+      "AUC ∈ [0,1] on random tied data") {
+    val rnd = new scala.util.Random(19)
+    val rows = (1L to 300L).map(i =>
+      (if (rnd.nextBoolean()) 1L else 0L, rnd.nextInt(20).toLong, i))
+    val df = rows.toDF("y", "score", "uid")
+    val flipped = rows.map { case (y, s, u) => (1L - y, s, u) }
+      .toDF("y", "score", "uid")
+    def auc(d: org.apache.spark.sql.DataFrame): Double =
+      RankStats.rocAucExact(d, "y", "score", "uid")
+        .collect().head.getAs[Double]("auc")
+    val a = auc(df)
+    val b = auc(flipped)
+    assert(a >= 0.0 && a <= 1.0)
+    assert(a + b == 1.0) // exact: u_x2 identities make it bit-true
+  }
+
+  test("calibrationBins: Σn == rows, Σn_pos == positives, brier and " +
+      "gap numerators match a direct fold, bins stay in range") {
+    val rnd = new scala.util.Random(23)
+    val rows = (1 to 500).map { _ =>
+      (rnd.nextInt(1000001).toLong, if (rnd.nextBoolean()) 1L else 0L)
+    }
+    val out = Scoring.calibrationBins(
+      rows.toDF("score_micro", "y"), "score_micro", "y").collect()
+    assert(out.map(_.getAs[Long]("n")).sum == rows.size)
+    assert(out.map(_.getAs[Long]("n_pos")).sum == rows.count(_._2 == 1L))
+    assert(out.forall { r =>
+      val b = r.getAs[Long]("bin"); b >= 0 && b <= 9 })
+    val brier = rows.map { case (s, y) =>
+      val d = s - y * 1000000L; d * d }.sum
+    assert(out.map(_.getAs[Long]("brier_num")).sum == brier)
+    // per-bin gap equals the direct per-bin fold
+    val direct = rows.groupBy { case (s, _) => math.min(s * 10 / 1000000, 9) }
+      .map { case (b, rs) =>
+        b -> math.abs(rs.map(_._1).sum - rs.map(_._2).sum * 1000000L) }
+    out.foreach { r =>
+      assert(r.getAs[Long]("ece_gap_num") ==
+        direct(r.getAs[Long]("bin"))) }
+  }
+
+  test("oneWayAnovaF: SSB + SSW == total SS (the ANOVA partition), " +
+      "both non-negative, on random groups") {
+    val rnd = new scala.util.Random(41)
+    val rows = (1 to 400).map(_ =>
+      (rnd.nextInt(6).toLong + 1, rnd.nextInt(10000).toLong))
+    val r = SeriesStats.oneWayAnovaF(rows.toDF("g", "cents"),
+      "g", "cents").collect().head
+    val ssb = r.getAs[Double]("ss_between")
+    val ssw = r.getAs[Double]("ss_within")
+    assert(ssb >= 0.0 && ssw >= 0.0)
+    // total SS from the raw data (value units²)
+    val xs = rows.map(_._2.toDouble / 100.0)
+    val mean = xs.sum / xs.size
+    val tot = xs.map(x => (x - mean) * (x - mean)).sum
+    assert(math.abs(ssb + ssw - tot) < 1e-6 * tot)
+  }
 }

@@ -75,4 +75,54 @@ class PrefixScanSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((0L, 0L), (1L, 1L), (2L, 2L), (3L, 3L)))
   }
+
+  test("PrefixScan: running-sum output is invariant to the partition " +
+      "count and equals the sequential fold (the scan law)") {
+    val rnd = new scala.util.Random(101)
+    val xs = (1L to 400L).map(t => (t, rnd.nextInt(2001) - 1000L))
+    val expected = xs.map(_._2).scanLeft(0L)(_ + _).tail
+      .zip(xs.map(_._1)).map { case (c, t) => (t, c) }.toSet
+    val m = new PrefixScan.ScanMonoid[Long] {
+      def stepCols: Seq[String] = Seq("x")
+      def zero: Long = 0L
+      def step(s: Long, v: Array[Any]): Long =
+        s + v(0).asInstanceOf[Long]
+      def combine(a: Long, b: Long): Long = a + b
+      def emit(post: Long, v: Array[Any]): Seq[Any] = Seq(post)
+    }
+    for (p <- Seq(1, 2, 7, 32)) {
+      val got = PrefixScan.scan[Long](
+          rnd.shuffle(xs).toDF("t", "x"), Seq(col("t")),
+          Seq(StructField("cum", LongType, nullable = false)), m,
+          numPartitions = p)
+        .select("t", "cum").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == expected, s"p=$p")
+    }
+  }
+
+  test("weightedQuantilesLong on PrefixScan: partition-count-invariant " +
+      "and equal to the serial weighted rank") {
+    val rnd = new scala.util.Random(117)
+    val rows = (1 to 300).map(_ =>
+      (rnd.nextInt(50).toLong, rnd.nextInt(9) + 1L))
+    val ps = Seq(0.25, 0.5, 0.9, 1.0)
+    // serial oracle: per-value weight sums, ascending cum, first value
+    // whose cum >= ceil(p*W)
+    val perV = rows.groupBy(_._1).view.mapValues(_.map(_._2).sum)
+      .toSeq.sortBy(_._1)
+    val total = perV.map(_._2).sum
+    val cum = perV.scanLeft((0L, 0L)) { case ((_, c), (v, w)) =>
+      (v, c + w) }.tail
+    val expect = ps.map { p =>
+      val t = math.ceil(p * total.toDouble).toLong
+      p -> cum.find(_._2 >= t).get._1
+    }.toMap
+    for (parts <- Seq(1, 5, 32)) {
+      val got = SketchStats.weightedQuantilesLong(
+          rows.toDF("v", "w").repartition(parts), "v", "w", ps)
+        .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
+      assert(got == expect, s"parts=$parts")
+    }
+  }
 }

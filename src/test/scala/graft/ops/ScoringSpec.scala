@@ -224,4 +224,49 @@ class ScoringSpec extends SparkSpec {
       .view.mapValues(_.map(_._2).sorted.toSeq).toMap
     assert(byGroup("lo") == byGroup("hi"), byGroup)
   }
+
+  test("simpsonsReversal: a constructed Berkeley-style reversal flags, " +
+      "a consistent dataset does not") {
+    // stratum X: A 50/100 vs B 6/10 (B better); stratum Y: A 1/10 vs
+    // B 20/100 (B better); pooled: A 51/110 vs B 26/110 (A better)
+    def rows(st: String, side: Boolean, succ: Int, fail: Int) =
+      Seq.fill(succ)((st, side, true)) ++ Seq.fill(fail)((st, side, false))
+    val d = (rows("X", false, 50, 50) ++ rows("X", true, 6, 4) ++
+      rows("Y", false, 1, 9) ++ rows("Y", true, 20, 80))
+      .toDF("st", "side", "succ")
+    val out = Scoring.simpsonsReversal(d, "st", "side", "succ")
+      .collect().map(r => r.getAs[String]("stratum") ->
+        ((r.getAs[Long]("direction"), r.getAs[Boolean]("reversed"))))
+      .toMap
+    assert(out("X") == ((-1L, false)) && out("Y") == ((-1L, false)))
+    assert(out("__pooled__") == ((1L, true)))
+    // same strata but B wins pooled too → no reversal
+    val ok = (rows("X", false, 10, 90) ++ rows("X", true, 60, 40) ++
+      rows("Y", false, 1, 9) ++ rows("Y", true, 20, 80))
+      .toDF("st", "side", "succ")
+    val out2 = Scoring.simpsonsReversal(ok, "st", "side", "succ")
+      .collect().map(r => r.getAs[String]("stratum") ->
+        r.getAs[Boolean]("reversed")).toMap
+    assert(!out2("__pooled__"))
+  }
+
+  test("tokenJsdMicro: identical slices give exactly 0, disjoint " +
+      "vocabularies give exactly ln2 micro, random splits sit between") {
+    val a = Seq("x y z", "x x w").toDF("text")
+    val same = Scoring.tokenJsdMicro(a, a, "text").collect().head
+    assert(same.getAs[Long]("sum_a_term") == 0L)
+    assert(same.getAs[Double]("jsd_micro") == 0.0)
+    val b = Seq("p q r", "p p s").toDF("text")
+    val dis = Scoring.tokenJsdMicro(a, b, "text").collect().head
+    assert(dis.getAs[Double]("jsd_micro") == 693147.0) // floor(1e6 ln2)
+    assert(dis.getAs[Long]("vocab") == 8L)
+    val rnd = new scala.util.Random(43)
+    val words = (1 to 200).map(_ => s"w${rnd.nextInt(30)}")
+    val docs = words.grouped(10).map(_.mkString(" ")).toSeq.toDF("text")
+    val docs2 = rnd.shuffle(words).grouped(10).map(_.mkString(" "))
+      .toSeq.toDF("text")
+    val mid = Scoring.tokenJsdMicro(docs, docs2, "text").collect().head
+      .getAs[Double]("jsd_micro")
+    assert(mid >= 0.0 - 1.0 && mid <= 693148.0) // floors can dip ~0⁻
+  }
 }

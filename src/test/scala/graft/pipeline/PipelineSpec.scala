@@ -243,21 +243,10 @@ class PipelineSpec extends SparkSpec {
     val m = master
     m.schema
     val pages = spark.createDataset(Seq(hourPage))
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    val merged = try {
-      val out = Pipeline.processBatch(spark, m, pages, asOf, ts)
-      org.apache.spark.TestListenerBus.drain(sc)
-      out
-    } finally sc.removeSparkListener(listener)
+    val (merged, jobs) =
+      jobsDuring(Pipeline.processBatch(spark, m, pages, asOf, ts))
     // the materialized normalized batch; the merge itself stays lazy
-    assert(jobs.get == 1)
+    assert(jobs == 1)
     assert(merged.count() == 3)
   }
 

@@ -97,16 +97,21 @@ class StreamingSpec extends SparkSpec {
 
   test("keyed lifecycle state emits insert and price-change CDC rows") {
     implicit val sq = spark.sqlContext
-    val stream = MemoryStream[(String, Double, Long)]
-    val cdc = StreamOps.lifecycle(stream.toDS(), quietMillis = 0L)
+    def ts(m: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 00:$m%02d:00")
+    val stream = MemoryStream[(String, Double, java.sql.Timestamp, Long)]
+    // the four events span 3 minutes: with a 1-day quiet period no
+    // event-time timeout fires, so only the CDC rows are emitted
+    val cdc = StreamOps.lifecycleEventTime(
+      stream.toDS().toDF("key", "price", "ts", "seq"),
+      quietMillis = 24L * 3600 * 1000, watermarkDelay = "1 hour")
     val q = cdc.writeStream.format("memory").queryName("cdc")
       .outputMode("append")
       .option("checkpointLocation",
         Files.createTempDirectory("graft-cdc").toString)
       .start()
-    stream.addData(("a", 100.0, 1L), ("b", 50.0, 2L))
+    stream.addData(("a", 100.0, ts(1), 1L), ("b", 50.0, ts(2), 2L))
     q.processAllAvailable()
-    stream.addData(("a", 120.0, 3L), ("b", 50.0, 4L))
+    stream.addData(("a", 120.0, ts(3), 3L), ("b", 50.0, ts(4), 4L))
     q.processAllAvailable()
     val rows = spark.table("cdc")
       .select($"key", $"kind", $"delta").as[(String, String, Option[Double])]
