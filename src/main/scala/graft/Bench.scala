@@ -230,7 +230,7 @@ object Bench {
       val heapFreeMb =
         (rt.maxMemory() - (rt.totalMemory() - rt.freeMemory())) / (1024L * 1024L)
       spark.catalog.clearCache()
-      tracker.awaitQuiesce(stableMs = 50, timeoutMs = 2000)
+      tracker.awaitQuiesce()
       val before = tracker.snapshot()
       val t0 = System.nanoTime()
       val run = try Some(runQuery(spark, name, sfDir)) catch {
@@ -244,7 +244,7 @@ object Bench {
       cleanUp(spark)
       // listener delivery is async — settle so this rep's task metrics
       // land in its own delta, not the next one's
-      tracker.awaitQuiesce(stableMs = 50, timeoutMs = 2000)
+      tracker.awaitQuiesce()
       val after = tracker.snapshot()
       val infos = spark.sparkContext.getRDDStorageInfo
       Rep(secs, run.map(_._2).getOrElse(0.0),

@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.pipeline.{Pipeline, RawPage}
-import graft.io.{AtomicParquet, PerfTracker}
+import graft.io.PerfTracker
 
 /** E2 equivalent (SURVEY §3): the cron-driven run. Builds the session,
-  * resolves run-mode flags, executes one E1 micro-batch over a directory
-  * of page files, atomically publishes the master, and writes the two
-  * CSV views (full + 7-day dashboard).
+  * resolves run-mode flags, and runs one [[Pipeline.hour]] over a
+  * directory of page files: the master commit and the two CSV views
+  * (full + 7-day dashboard) under `--out`, next to the run's perf log.
+  * A run whose `--as-of` (default: the local wall clock) is not later
+  * than the last committed hour's is a replay and commits nothing.
   *
   * Usage:
   *   runMain graft.Main --pages <dir-of-html> --master <parquet-path>
@@ -36,8 +37,6 @@ object Main {
     val perf = PerfTracker.install(spark)
     import spark.implicits._
 
-    val asOf = lit(asOfStr).cast("timestamp")
-    val master = AtomicParquet.read(spark, masterPath, Pipeline.emptyMaster(spark))
     // URL recovery: a listing page's offer_id comes from its URL, which a
     // plain file dump loses. Convention: a file named <digits>.html is
     // listing /rent/flat/<digits>/; anything else keeps its path as url
@@ -50,16 +49,11 @@ object Main {
         case (path, html) => RawPage(path, html)
       }.toDS()
 
-    val merged = Pipeline.processBatch(spark, master, pages, asOf, asOfStr,
+    val hour = Pipeline.hour(spark, pages, asOfStr, masterPath, outDir,
       updateUnpublishedBySearch = !flags("--no-unpublish-by-search"))
-
-    AtomicParquet.publish(merged, masterPath)
-    // the views and the row count read the version just published
-    val published = AtomicParquet.read(spark, masterPath, Pipeline.emptyMaster(spark))
-    Pipeline.writeCsv(published, s"$outDir/combined_data")
-    Pipeline.writeCsv(Pipeline.dashboardView(published, asOf),
-      s"$outDir/combined_data_filtered")
-    println(s"master rows: ${published.count()}")
+    println(s"master rows: ${hour.master.count()}")
+    println(s"hour $asOfStr: " +
+      (if (hour.applied) "applied" else "skipped as a replay of a committed hour"))
     new java.io.File(outDir).mkdirs()
     perf.awaitQuiesce()
     perf.writeLog(s"$outDir/performance_log.jsonl")

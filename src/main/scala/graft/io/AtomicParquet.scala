@@ -15,10 +15,13 @@ object AtomicParquet {
       schemaSource: => DataFrame): DataFrame =
     TableLog.readRoot(spark, path, spark.read.parquet(_), schemaSource.schema)
 
-  /** Replace the table with `df`, which may lazily read the current one. */
-  def publish(df: DataFrame, path: String): Unit =
-    TableLog.commit(df.sparkSession, path, Map.empty[String, String],
-      TableLog.replace(TableLog.Root, df))
+  /** Replace the table with `df`, which may lazily read the current one,
+    * recording `txn` (a writer and its id). False when `txn` is a replay
+    * ([[TableLog.commit]]): the table is left as it is. */
+  def publish(df: DataFrame, path: String,
+      txn: Option[(String, Long)] = None): Boolean =
+    TableLog.commit(df.sparkSession, path, Map.empty[String, String], txn,
+      Seq(TableLog.replace(TableLog.Root, df)))
 
   /** True when `path` holds a published artifact. */
   def exists(spark: SparkSession, path: String): Boolean = TableLog.exists(spark, path)

@@ -3,8 +3,8 @@ package graft.io
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.Success
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.{SparkContext, Success}
 
 /** A13 perf-log sink: the reference's PerformanceTracker
   * (scraper/performance_tracker.py:95-158) re-expressed on Spark's
@@ -18,7 +18,7 @@ import org.apache.spark.Success
   * pipe table. Attach with [[PerfTracker.install]]; dump JSON lines to
   * a file with [[writeLog]].
   */
-class PerfTracker extends SparkListener {
+class PerfTracker(sc: SparkContext) extends SparkListener {
 
   private val startedAtMs = System.currentTimeMillis()
   private val processed = new LongAdder
@@ -105,20 +105,10 @@ class PerfTracker extends SparkListener {
       s.failed, s.retried, s.speed, s.jvmHeapUsedMb)
   }
 
-  /** Listener delivery is asynchronous; block until the counters have
-    * been stable for `stableMs` (capped at `timeoutMs`) before taking an
-    * end-of-run snapshot, so the final jobs' task events are included. */
-  def awaitQuiesce(stableMs: Long = 200, timeoutMs: Long = 5000): Unit = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var last = processed.sum()
-    var lastChange = System.currentTimeMillis()
-    while (System.currentTimeMillis() < deadline &&
-        System.currentTimeMillis() - lastChange < stableMs) {
-      Thread.sleep(25)
-      val p = processed.sum()
-      if (p != last) { last = p; lastChange = System.currentTimeMillis() }
-    }
-  }
+  /** Listener delivery is asynchronous; block until the listener bus
+    * has delivered every event posted so far, so an end-of-run snapshot
+    * includes the finished jobs' task events. */
+  def awaitQuiesce(): Unit = GraftBridge.drainListeners(sc)
 
   /** Append the current perf line to a local JSON-lines log. */
   def writeLog(path: String): Unit = {
@@ -130,7 +120,7 @@ class PerfTracker extends SparkListener {
 object PerfTracker {
   /** Attach a fresh tracker to the session's listener bus. */
   def install(spark: SparkSession): PerfTracker = {
-    val t = new PerfTracker
+    val t = new PerfTracker(spark.sparkContext)
     spark.sparkContext.addSparkListener(t)
     t
   }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Layout under `dir`: the root table's files at the top level (a plain
   * `spark.read.parquet(dir)` reads them: Spark takes only a directory's
   * own files, never `log/`), each named table's in `<table>/`, and
-  * `log/<N>.json` for version N: the parameters, each streaming writer's
-  * last batch id, and per table its format, schema and live files
+  * `log/<N>.json` for version N: the parameters, each writer's last
+  * transaction id, and per table its format, schema and live files
   * relative to `dir`. Readers take the latest entry: no Spark job.
   *
   * A commit deletes strays as [[recover]] does, appends each frame,
@@ -33,8 +33,8 @@ object TableLog {
   /** `schema` is a `StructType`'s JSON; `format` wrote `files` (`parquet`, `json`). */
   final case class Table(format: String, schema: String, files: Seq[String])
 
-  /** `txns` maps a streaming writer (its checkpoint) to the last batch id
-    * it committed — Delta's `txnAppId`/`txnVersion`. */
+  /** `txns` maps a writer (a stream's checkpoint, or the hourly run) to
+    * the last id it committed — Delta's `txnAppId`/`txnVersion`. */
   final case class Entry(version: Long, params: Map[String, String],
       tables: Map[String, Table],
       @JsonDeserialize(contentAs = classOf[java.lang.Long]) txns: Map[String, Long])
@@ -133,15 +133,20 @@ object TableLog {
     * latest version's rows must carry its parameters — rows built under
     * other parameters would silently mix. */
   def commit(spark: SparkSession, dir: String, params: Map[String, String],
-      changes: Change*): Unit = commit(spark, dir, params, None, changes)
+      changes: Change*): Boolean = commit(spark, dir, params, None, changes)
 
-  /** As above, also recording `txn`: a streaming writer and the batch id
-    * it applied. The first commit to the root table of a directory with
-    * no log first commits version 0: the directory's files, as they are. */
+  /** As above, also recording `txn`: a writer and the id of what it
+    * applied. A `txn` whose id is at or below the id its writer last
+    * recorded is a replay: nothing is written and the result is false.
+    * The first commit to the root table of a directory with no log first
+    * commits version 0: the directory's files, as they are. */
   def commit(spark: SparkSession, dir: String, params: Map[String, String],
-      txn: Option[(String, Long)], changes: Seq[Change]): Unit = {
+      txn: Option[(String, Long)], changes: Seq[Change]): Boolean = {
+    val last = latest(spark, dir)
+    if (txn.exists { case (w, id) => last.exists(_.txns.get(w).exists(_ >= id)) })
+      return false
     val fs = fsOf(spark, dir)
-    val prev = latest(spark, dir).orElse(changes.find(_.table == Root).map { c =>
+    val prev = last.orElse(changes.find(_.table == Root).map { c =>
       val own = files(fs, dir, Root)
       val adopted = if (own.isEmpty) Map.empty[String, Table] else
         Map(Root -> Table(c.format, spark.read.format(c.format).load(dir).schema.json, own))
@@ -165,5 +170,6 @@ object TableLog {
     for (t <- replaced; f <- listed(t)) fs.delete(new Path(dir, f), false)
     for (s <- fs.listStatus(new Path(dir, "log")) if s.getPath.getName != s"${next.version}.json")
       fs.delete(s.getPath, false)
+    true
   }
 }

@@ -1,9 +1,12 @@
 package graft.pipeline
 
+import java.time.{LocalDateTime, ZoneOffset}
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.{Flatten, Normalize}
 import graft.functions.RuntimeParam
+import graft.io.AtomicParquet
 import graft.merge.MergeListings
 import graft.ops.Materialize
 import graft.parse.ListingParser
@@ -119,6 +122,34 @@ object Pipeline {
           allowMissingColumns = true)
       else normalized
     MergeListings.mergeBatch(master, batch, Some("__arrival"))
+  }
+
+  /** What [[hour]] did: whether its commit applied, and the committed master. */
+  final case class Hour(applied: Boolean, master: DataFrame)
+
+  /** One hour, the reference's single cron entry (parse_data.py): read
+    * the master, run [[processBatch]] over `pages`, commit, and write the
+    * CSV views `combined_data` and `combined_data_filtered` (the
+    * [[dashboardView]]) under `viewsDir` from the committed version.
+    *
+    * `asOf` (`yyyy-MM-dd HH:mm:ss`, UTC) is also the hour's identity: the
+    * commit records the txn ("hour", `asOf` in epoch seconds), so a run
+    * whose `asOf` is not later than the last committed hour's is a replay.
+    * The one replay rule is [[graft.io.TableLog.commit]]'s: a replayed hour
+    * still runs processBatch's parse job, commits nothing (`applied` is
+    * false) and rewrites the views from the committed version. */
+  def hour(spark: SparkSession, pages: Dataset[RawPage], asOf: String,
+      masterPath: String, viewsDir: String,
+      updateUnpublishedBySearch: Boolean = true): Hour = {
+    def read = AtomicParquet.read(spark, masterPath, emptyMaster(spark))
+    val asOfTs = lit(asOf).cast("timestamp")
+    val merged = processBatch(spark, read, pages, asOfTs, asOf, updateUnpublishedBySearch)
+    val txn = "hour" -> LocalDateTime.parse(asOf.replace(' ', 'T')).toEpochSecond(ZoneOffset.UTC)
+    val applied = AtomicParquet.publish(merged, masterPath, Some(txn))
+    val master = read
+    writeCsv(master, s"$viewsDir/combined_data")
+    writeCsv(dashboardView(master, asOfTs), s"$viewsDir/combined_data_filtered")
+    Hour(applied, master)
   }
 
   /** P3: active rows missing a price estimation → re-scrape work list

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.{AtomicParquet, TableLog}
+import graft.io.AtomicParquet
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
@@ -33,9 +33,9 @@ final case class MicroBatchRun(stream: DataFrame, mode: OutputMode,
 object StreamingMerge {
 
   /** Micro-batch upsert: each streaming batch MERGEs into the Parquet
-    * master in one [[TableLog]] commit (S7 — the reference's whole-file-
-    * rewrite transaction, parse_data.py:222) that records the batch id
-    * under `checkpointDir`, so a batch replayed after a crash is skipped.
+    * master in one [[graft.io.TableLog]] commit (S7, the reference's
+    * whole-file-rewrite transaction, parse_data.py:222) recording the batch
+    * id under `checkpointDir`: a batch replayed after a crash is skipped.
     */
   def start(batches: DataFrame, masterPath: String,
       checkpointDir: String, seqCol: Option[String] = None): StreamingQuery =
@@ -45,14 +45,16 @@ object StreamingMerge {
           Some(checkpointDir -> batchId))
       }
 
-  /** One micro-batch merge + atomic publish (callable from batch mode
-    * too — the cron-driven E2 entry uses exactly this).
+  /** One micro-batch merge + atomic publish. The hourly run
+    * ([[graft.pipeline.Pipeline.hour]]) commits through the same
+    * [[AtomicParquet.publish]] and replay rule.
     *
     * @param seqCol optional source column giving the deterministic fold
     *        order for multiple same-key rows inside one micro-batch (the
     *        reference folds listings in scrape order, merge.py:96-99)
-    * @param txn the (writer, batch id) applied; a batch at or below the
-    *        writer's recorded id is skipped
+    * @param txn the (writer, batch id) applied; the commit skips a batch
+    *        at or below the writer's recorded id, after the batch's
+    *        materialization has run
     *
     * The merge's url fallback reads the micro-batch three times, so it
     * is materialized once: here when `seqCol` is given (the merge then
@@ -61,16 +63,11 @@ object StreamingMerge {
   def mergeIntoMaster(spark: SparkSession, batch: DataFrame,
       masterPath: String, seqCol: Option[String] = None,
       txn: Option[(String, Long)] = None): Unit = {
-    val replayed = txn.exists { case (writer, id) =>
-      TableLog.latest(spark, masterPath).exists(_.txns.get(writer).exists(_ >= id)) }
-    if (!replayed) {
-      val master = AtomicParquet.read(spark, masterPath, batch)
-      val source = if (seqCol.isDefined) graft.ops.Materialize(batch) else batch
-      // the commit deletes the master's files only after its entry lands
-      val merged = graft.merge.MergeListings.mergeBatch(master, source, seqCol)
-      TableLog.commit(spark, masterPath, Map.empty[String, String], txn,
-        Seq(TableLog.replace(TableLog.Root, merged)))
-    }
+    val master = AtomicParquet.read(spark, masterPath, batch)
+    val source = if (seqCol.isDefined) graft.ops.Materialize(batch) else batch
+    // the commit deletes the master's files only after its entry lands
+    AtomicParquet.publish(
+      graft.merge.MergeListings.mergeBatch(master, source, seqCol), masterPath, txn)
   }
 }
 

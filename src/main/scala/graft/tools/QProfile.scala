@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
+import org.apache.spark.sql.GraftBridge
 import graft.{Bench, GraftSession, SparkEntry}
 import scala.collection.mutable.ArrayBuffer
 
@@ -56,7 +57,7 @@ object QProfile {
       val t4 = System.nanoTime()
       val rows = df.count()
       val t5 = System.nanoTime()
-      Thread.sleep(700) // listener delivery is async
+      GraftBridge.drainListeners(spark.sparkContext) // listener delivery is async
       def s(a: Long, b: Long) = f"${(b - a) / 1e9}%.2f"
       val (ss, nj) = stages.synchronized { (stages.toVector, jobs) }
       println(s"[qprofile] $name rows=$rows build=${s(t0, t1)} " +

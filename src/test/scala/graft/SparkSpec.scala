@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, forked by sbt). */
@@ -19,11 +19,11 @@ trait SparkSpec extends AnyFunSuite {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    org.apache.spark.TestListenerBus.drain(sc)
+    GraftBridge.drainListeners(sc)
     sc.addSparkListener(listener)
     try {
       val out = body
-      org.apache.spark.TestListenerBus.drain(sc)
+      GraftBridge.drainListeners(sc)
       (out, jobs.get)
     } finally sc.removeSparkListener(listener)
   }

@@ -9,10 +9,8 @@ class PerfTrackerSpec extends SparkSpec {
   test("A13 tracker accumulates task metrics; log line is valid JSON") {
     val t = PerfTracker.install(spark)
     spark.range(100000).selectExpr("sum(id)").collect()
-    // the listener bus is asynchronous — poll for delivery
-    val deadline = System.currentTimeMillis() + 10000
-    while (t.snapshot().processed == 0 &&
-      System.currentTimeMillis() < deadline) Thread.sleep(50)
+    // the listener bus is asynchronous — drain it before the snapshot
+    t.awaitQuiesce()
     val s = t.snapshot()
     assert(s.processed > 0)
     assert(s.successful == s.processed && s.failed == 0)

@@ -65,6 +65,29 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.latest(spark, dir).get.params == Map("k" -> "2"))
   }
 
+  test("a writer's txn at or below its recorded id is a replay: nothing " +
+      "is written and the commit returns false") {
+    val dir = Scratch.dir("tablelog-txn-") + "/a"
+    def commit(txn: Option[(String, Long)], ids: Range): Boolean =
+      TableLog.commit(spark, dir, p, txn, Seq(TableLog.append("t", frame(ids))))
+    assert(commit(Some("w" -> 5L), 0 until 2))
+    val v0 = TableLog.latest(spark, dir).get
+    val files0 = onDisk(dir, "t")
+    assert(!commit(Some("w" -> 5L), 2 until 4))
+    assert(!commit(Some("w" -> 4L), 2 until 4))
+    assert(TableLog.latest(spark, dir).get == v0)
+    assert(onDisk(dir, "t") == files0 && logNames(dir) == Set("0.json"))
+    assert(rows(read(dir)) == rows(frame(0 until 2)))
+    // a higher id, another writer, and no txn all apply
+    assert(commit(Some("w" -> 6L), 2 until 3))
+    assert(commit(Some("v" -> 1L), 3 until 4))
+    assert(commit(None, 4 until 5))
+    assert(commit(None, 5 until 6))
+    val e = TableLog.latest(spark, dir).get
+    assert(e.version == 4 && e.txns == Map("w" -> 6L, "v" -> 1L))
+    assert(rows(read(dir)) == rows(frame(0 until 6)))
+  }
+
   test("a crash before the log rename: readers see version N, and the " +
       "next commit deletes the strays") {
     val dir = Scratch.dir("tablelog-pre-") + "/a"

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.io.BucketedMaster
 import org.apache.spark.sql.functions._
 
 class ScaleOpsSpec extends SparkSpec {
@@ -88,34 +87,6 @@ class ScaleOpsSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"))
-  }
-
-  test("bucketed master: merge plan has no Exchange on the master side") {
-    spark.sql("DROP TABLE IF EXISTS graft_master_test")
-    val master = Seq(("1", "2026-01-01 10:00:00", 100.0),
-      ("2", "2026-01-01 10:00:00", 200.0))
-      .toDF("offer_id", "updated_date", "price_value")
-    BucketedMaster.write(master, "graft_master_test", buckets = 4)
-
-    val batch = Seq(("1", "2026-01-02 10:00:00", 90.0))
-      .toDF("offer_id", "updated_date", "price_value")
-    val merged = BucketedMaster.merge(spark, "graft_master_test", batch)
-    // correctness first
-    val r = merged.filter($"offer_id" === "1").collect().head
-    assert(r.getAs[Double]("price_value") == 90.0)
-    assert(r.getAs[String]("price_changes") == "-10")
-
-    // plan shape: the bucketed scan side must not re-shuffle. The batch
-    // side shuffles once (groupBy) — total Exchanges strictly fewer than
-    // the unbucketed plan's.
-    val bucketedPlan = merged.queryExecution.executedPlan.toString
-    val unbucketed = graft.merge.MergeListings.mergeBatch(
-      master, batch).queryExecution.executedPlan.toString
-    def exchanges(p: String) = p.split("\n").count(_.contains("Exchange"))
-    info(s"exchanges bucketed=${exchanges(bucketedPlan)} " +
-      s"unbucketed=${exchanges(unbucketed)}")
-    assert(exchanges(bucketedPlan) < exchanges(unbucketed))
-    spark.sql("DROP TABLE IF EXISTS graft_master_test")
   }
 
   test("decontamination plan: equality gram join, no cartesian, map-side combined counts") {

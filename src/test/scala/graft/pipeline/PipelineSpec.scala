@@ -1,8 +1,11 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.io.{AtomicParquet, TableLog}
 import graft.parse.ListingParser
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import scala.io.Source
 
 /** Golden parser tests (U1/U2 over committed fixtures) + the minimum
@@ -266,6 +269,88 @@ class PipelineSpec extends SparkSpec {
       assert(keys.length == keys.distinct.length, s"hour $h")
       assert(keys.toSet == Set("1001", "1002", "1003"), s"hour $h")
     }
+  }
+
+  // ---- Pipeline.hour: the hourly run over a committed master ----
+
+  private val searchPage = RawPage("https://www.cian.ru/cat.php?p=1", fixture("search_page.html"))
+  private val listingPage =
+    RawPage("https://www.cian.ru/rent/flat/1001/", fixture("listing_page.html"))
+
+  private def runHour(pages: RawPage, at: String, dir: String): Pipeline.Hour =
+    Pipeline.hour(spark, spark.createDataset(Seq(pages)), at, s"$dir/master", s"$dir/views")
+
+  /** Two hours into a fresh directory: the search page inserts 1001-1003
+    * at 10:00; at 11:00 1001's listing page drops its price and 1002 and
+    * 1003 have left the search. */
+  private def twoHours(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-hours").toString
+    assert(runHour(searchPage, "2026-08-12 10:00:00", dir).applied)
+    assert(runHour(listingPage, "2026-08-12 11:00:00", dir).applied)
+    dir
+  }
+
+  private def committed(dir: String): DataFrame =
+    AtomicParquet.read(spark, s"$dir/master", Pipeline.emptyMaster(spark))
+
+  /** `df` as its CSV view holds it: NaN as null, complex columns as JSON,
+    * and strings trimmed. Spark's CSV writer drops a value's leading and
+    * trailing spaces (`ignoreLeadingWhiteSpace`/`ignoreTrailingWhiteSpace`
+    * default to true on write), so " комм. платежи включены" loses its
+    * space, where the reference's pandas `to_csv` keeps it. */
+  private def csvImage(df: DataFrame): DataFrame = df.select(df.schema.fields.map { f =>
+    f.dataType match {
+      case DoubleType | FloatType => when(!isnan(col(f.name)), col(f.name)).as(f.name)
+      case _: ArrayType | _: MapType | _: StructType => to_json(col(f.name)).as(f.name)
+      case StringType => trim(col(f.name)).as(f.name)
+      case _ => col(f.name)
+    }
+  }.toSeq: _*)
+
+  /** A CSV view read back with RFC-4180 quoting; with `like`, its header
+    * must name `like`'s columns in order and the values take their types. */
+  private def readCsv(path: String, like: Option[DataFrame] = None): Set[Row] = {
+    val reader = spark.read.option("header", "true").option("escape", "\"")
+      .option("multiLine", "true").option("enforceSchema", "false")
+    like.fold(reader)(l => reader.schema(l.schema)).csv(path).collect().toSet
+  }
+
+  test("Pipeline.hour: two hours commit the master and write both CSV views from it") {
+    val dir = twoHours()
+    val master = committed(dir)
+    val rows = master.collect().map(r => r.getAs[String]("offer_id") -> r).toMap
+    assert(rows.keySet == Set("1001", "1002", "1003"))
+    assert(rows("1001").getAs[Double]("price_value") == 54000.0)
+    assert(rows("1001").getAs[Long]("total_price_changes") == 1L)
+    assert(!rows("1001").getAs[Boolean]("is_unpublished"))
+    assert(rows("1002").getAs[Boolean]("is_unpublished"))
+    assert(rows("1003").getAs[Boolean]("is_unpublished"))
+    assert(TableLog.latest(spark, s"$dir/master").get.txns ==
+      Map("hour" -> java.time.Instant.parse("2026-08-12T11:00:00Z").getEpochSecond))
+
+    val full = csvImage(master)
+    val view = csvImage(Pipeline.dashboardView(master,
+      lit("2026-08-12 11:00:00").cast("timestamp")))
+    assert(readCsv(s"$dir/views/combined_data", Some(full)) == full.collect().toSet)
+    assert(readCsv(s"$dir/views/combined_data_filtered", Some(view)) == view.collect().toSet)
+    // the image_urls JSON reaches the file with its quotes doubled
+    val csv = new java.io.File(s"$dir/views/combined_data").listFiles()
+      .filter(_.getName.endsWith(".csv")).map(f => java.nio.file.Files.readString(f.toPath))
+    assert(csv.exists(_.contains("\"\"https://images.cdn-cian.ru/")))
+  }
+
+  test("Pipeline.hour: a replayed hour commits nothing and rewrites the same views") {
+    val dir = twoHours()
+    def state = (TableLog.latest(spark, s"$dir/master").get.version,
+      committed(dir).select("offer_id", "total_price_changes").collect().toSet,
+      readCsv(s"$dir/views/combined_data"), readCsv(s"$dir/views/combined_data_filtered"))
+    val before = state
+    assert(!runHour(listingPage, "2026-08-12 11:00:00", dir).applied)
+    assert(state == before)
+    // an earlier hour whose page would put 1001's price back and re-list
+    // 1002 and 1003 if it applied
+    assert(!runHour(searchPage, "2026-08-12 10:30:00", dir).applied)
+    assert(state == before)
   }
 
   test("status column derives from is_unpublished (B4)") {
